@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.filemover import (
     list_output_files,
     write_single_file,
@@ -194,53 +195,33 @@ def move_collision_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# A1's completed-write fixture, keyed (applicationId, sf_dir) — one
-# live entry, stale directory rmtree-evicted (the B15/B7 setup-cache
-# lifecycle). The fixture is a pure function of the immutable nation
-# input, and the OPERATOR the key declares is the recursive listing of
-# a completed write — in a real deployment the write happened in some
-# upstream job, the mover only ever lists it. The listing + per-dir
-# rollup run on every invocation; the listing never mutates the dir.
-_last_a1_fixture: tuple | None = None
-
-
 def _write_partitioned_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write nation partitioned by region key to a temp dir (the write
     pipeline the mover operates on, ref test :52-59) and return the
-    path. Cached per (SparkContext, sf_dir): the write is SETUP (r15,
-    the scan-dpp-join discipline), the listing is the operator."""
-    global _last_a1_fixture
-    import os
+    path. A temp-dir artifact per (SparkContext, corpus): the write is
+    SETUP (r15, the scan-dpp-join discipline) that a real deployment
+    ran in some upstream job; the recursive listing + per-dir rollup,
+    the operator the key declares, run on every invocation without
+    mutating the dir. A reaped directory is rebuilt (an OS tmp
+    reaper on a long session would otherwise turn A1 into an empty
+    manifest)."""
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    # ADVICE r15: require the cached dir to still EXIST (the B22
-    # template-cache liveness check) — an OS tmp reaper on a long
-    # session would otherwise turn A1 into an empty manifest.
-    if (
-        _last_a1_fixture is not None
-        and _last_a1_fixture[0] == cache_key
-        and os.path.isdir(_last_a1_fixture[1])
-    ):
-        return _last_a1_fixture[1]
-    if _last_a1_fixture is not None:
-        import os
-        import shutil
-
-        shutil.rmtree(
-            os.path.dirname(_last_a1_fixture[1]), ignore_errors=True
+    def write() -> str:
+        root = tempfile.mkdtemp(prefix="sfm-a1-")
+        n = load_table(spark, sf_dir, "nation")
+        (
+            n.coalesce(1)
+            .write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("n_regionkey")
+            .csv(root + "/out")
         )
-        _last_a1_fixture = None
-    out = tempfile.mkdtemp(prefix="sfm-a1-") + "/out"
-    n = load_table(spark, sf_dir, "nation")
-    (
-        n.coalesce(1)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("n_regionkey")
-        .csv(out)
+        return root
+
+    root = artifacts.get_or_build_dir(
+        spark, "filemover_queries.a1_fixture", write, sf_dir=sf_dir
     )
-    _last_a1_fixture = (cache_key, out)
-    return out
+    return root + "/out"
 
 
 # The listing's expected layout is fully determined by the data: one

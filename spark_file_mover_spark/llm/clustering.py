@@ -21,9 +21,10 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
+    cached_plan,
     load_table,
     plan_cached,
 )
@@ -38,15 +39,6 @@ _KM_DIM = 64  # embeddings.embedding dimension (FIXTURES.md)
 _KM_K = 8
 _KM_ROUNDS = 3  # assignment rounds; updates run after rounds 1..ROUNDS-1
 _KM_QSCALE = 10**6  # fixed-point scale: |x| <= ~0.4 -> |q| <= ~4*10^5
-
-# Materialized-view cache for the quantized relation + converged
-# centroids, keyed on (applicationId, sf_dir) — the _PR_GRAPH_CACHE
-# contract: the clustering is a pure function of immutable input files,
-# so a production deployment maintains the centroid table as a
-# materialized view and repeated invocations pay only the final
-# assignment scan. Stale-appId entries evicted on first use after a
-# SparkContext restart.
-_KM_CACHE: dict = {}
 
 
 def _km_cte_prefix(k: int = _KM_K, rounds: int = _KM_ROUNDS) -> str:
@@ -284,7 +276,7 @@ def embed_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round cost is one scan + one 512-row aggregate — the loop never
     joins data-to-data. Converged centroids + the checkpointed relation
     cache per (SparkContext, sf_dir) as the materialized view a
-    production deployment maintains (_PR_GRAPH_CACHE contract);
+    production deployment maintains (the graph-artifact contract);
     driver-fresh single runs still pay the full fit, pinned by tests.
     """
     qdf, cents = _km_model(spark, sf_dir)
@@ -306,20 +298,19 @@ def _km_model(
     materialized-view cache — shared by embed-kmeans-lloyd (which
     declares it), embed-ann-ivfpq (whose IVF coarse quantizer it is,
     both at K=8) and dedup-semdedup (same Lloyd machinery at its own
-    finer K). Entries key on (corpus, k); entries for a DIFFERENT
-    corpus/context are evicted (the phash-bands one-live-corpus
-    policy) while sibling-k models of the live corpus coexist — a
-    sweep alternating kmeans (K=8) and semdedup (K=64) must not
-    thrash the fit."""
-    base = artifact_cache_key(spark, sf_dir)
-    cache_key = (base, k)
-    cached = _KM_CACHE.get(cache_key)
-    if cached is None:
-        for stale in [kk for kk in _KM_CACHE if kk[0] != base]:
-            del _KM_CACHE[stale]
-        cached = _km_fit(spark, sf_dir, k, assign=assign, rounds=rounds)
-        _KM_CACHE[cache_key] = cached
-    return cached
+    finer K). The clustering is a pure function of immutable input
+    files, so a production deployment maintains the centroid table as
+    a materialized view and repeated invocations pay only the final
+    assignment scan. One artifact per k: sibling-k models of the live
+    corpus coexist — a sweep alternating kmeans (K=8) and semdedup
+    (K=64) must not thrash the fit."""
+    return artifacts.get_or_build(
+        spark,
+        f"clustering.kmeans.{k}",
+        lambda: _km_fit(spark, sf_dir, k, assign=assign, rounds=rounds),
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -394,12 +385,6 @@ FROM q ORDER BY vec_id
 """
 
 
-# Parsed-expression cache per SparkContext (the _PHASH_EXPR_CACHE
-# contract): the 8*16 fold Columns are pure expression trees whose py4j
-# construction cost is worth paying once per JVM, not per invocation.
-_PQ_EXPR_CACHE: dict = {}
-
-
 def _pq_best(s: int):
     return _nearest_fold(
         f"u.sub{s}",
@@ -444,11 +429,9 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen survives at any K (the embed-random-projection janino
     lesson). Expression trees cache per SparkContext."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ck = spark.sparkContext.applicationId
-    cached = _PQ_EXPR_CACHE.get(ck)
-    if cached is None:
-        for k in [k for k in _PQ_EXPR_CACHE if k != ck]:
-            del _PQ_EXPR_CACHE[k]
+    # the 8*16 fold Columns are pure expression trees whose py4j
+    # construction cost is worth paying once per JVM, not per invocation
+    def build() -> tuple:
         subs = F.struct(
             *[
                 F.transform(
@@ -461,9 +444,9 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         bests = F.struct(
             *[_pq_best(s).alias(f"b{s}") for s in range(_PQ_SUB)]
         )
-        cached = (subs, bests)
-        _PQ_EXPR_CACHE[ck] = cached
-    subs, bests = cached
+        return subs, bests
+
+    subs, bests = artifacts.get_or_build(spark, "clustering.pq_exprs", build)
     st0 = emb.select("vec_id", F.explode(F.array(subs)).alias("u"))
     st1 = st0.select("vec_id", F.explode(F.array(bests)).alias("bb"))
     err = F.col("bb.b0.d")
@@ -484,10 +467,6 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_NPROBE = 2
 _IVFPQ_TOPK = 3
 _IVFPQ_NQ = 5  # query set: vec_id < 5 (the sim-search-topk convention)
-
-# (appId, sf_dir) -> localCheckpointed (vec_id, cluster, s, code) index
-# relation — the ingest-time artifact (the _PR_GRAPH_CACHE contract)
-_IVFPQ_CACHE: dict = {}
 
 
 def _ivfpq_oracle() -> str:
@@ -656,30 +635,20 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recall < 100% by construction, tuned by nprobe). At 10^9 vectors
     the corpus would be written bucketed by cell id so a probe is a
     partition-pruned scan."""
-    from spark_file_mover_spark import checkpoints
-
-    # ADVICE r15: every _IVFPQ_CACHE entry is BYPASSED (read and write,
-    # no eviction either) under the plan-only tooling mode — a model/
-    # index/plan built through the substituted empty-leaf checkpoint
-    # inside _km_fit is tooling-shaped and must never serve production
-    # invocations (the sources.io.cached_plan rule).
-    lazy = checkpoints.LAZY_ACTIVE
-    # ADVICE r15: keyed on artifact_cache_key (appId + sf_dir + corpus
-    # fingerprint — the other r15 plan caches' contract) so an in-place
-    # corpus rewrite misses instead of serving a stale index/plan (the
-    # documented r8 cache-contract gap: (appId, sf_dir) alone only
-    # detected switching directories).
-    base = artifact_cache_key(spark, sf_dir)
     # r15: probe pick, ADC tables and the candidate scoring joins are a
     # pure PLAN over the cached index + expression fragments — cache
-    # the built DataFrame (the multimodal _ASSET_PLAN_CACHE discipline:
-    # construction once, execution per action). ~0.5 s of
-    # py4j/analysis per invocation before.
-    plan = None if lazy else _IVFPQ_CACHE.get((base, "plan"))
-    if plan is not None:
-        # fresh no-op projection — see sources.io.cached_plan
-        return plan.select("*")
+    # the built DataFrame (construction once, execution per action).
+    # ~0.5 s of py4j/analysis per invocation before.
+    return cached_plan(
+        spark, sf_dir, "embed-ann-ivfpq", lambda: _ivfpq_plan(spark, sf_dir)
+    )
+
+
+def _ivfpq_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from spark_file_mover_spark import checkpoints
+
     qdf, cents = _km_model(spark, sf_dir)
+
     # The (cluster, PQ-code) relation IS the IVF-PQ index — the
     # artifact a deployment builds once at INGEST and every query
     # reads. It persists (MEMORY_AND_DISK) and caches per
@@ -687,35 +656,31 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without this every query action re-ran the full corpus assign +
     # encode once per DAG reference (~11 s/invocation at sf0.1 vs
     # ~1 s with the index materialized).
-    index_key = (base, "index")
-    cached = None if lazy else _IVFPQ_CACHE.get(index_key)
-    if cached is None:
+    def build_index() -> DataFrame:
         asg = _km_assign(qdf, cents).select("vec_id", "qv", "cluster")
-        if lazy:
-            # plan-only: bare lazy relation — no persist/count jobs,
-            # nothing cached, live entries untouched
-            cached = _ivfpq_codes(asg, cents)
-        else:
-            # one live (app, corpus) — stale checkpoints release via
-            # the ContextCleaner once dereferenced (the _KM_CACHE
-            # policy); sibling entries for the same corpus survive
-            for k in [k for k in _IVFPQ_CACHE if k[0] != base]:
-                del _IVFPQ_CACHE[k]
-            cached = _ivfpq_codes(asg, cents).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            cached.count()  # eager populate (probe + ADC both read it)
-            _IVFPQ_CACHE[index_key] = cached
-    codes = cached
+        codes = _ivfpq_codes(asg, cents)
+        if checkpoints.LAZY_ACTIVE:
+            # plan-only: bare lazy relation — no persist/count jobs
+            return codes
+        codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
+        codes.count()  # eager populate (probe + ADC both read it)
+        return codes
+
+    codes = artifacts.get_or_build(
+        spark,
+        "clustering.ivfpq_index",
+        build_index,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
 
     # query-side: the query set assigns AFTER the filter (5 rows, not
     # the corpus) — nprobe nearest cells per query, ties -> lower cid.
     # The probe/residual/ADC expression trees are name-based Columns
     # (~4.5 s of py4j construction: 136 folds with literal arrays) and
-    # cache with the index (the _TIFF_EXPR_CACHE lesson: build once
-    # per context, measured 6.5 -> ~1.5 s per invocation).
-    frags = None if lazy else _IVFPQ_CACHE.get((base, "exprs"))
-    if frags is None:
+    # cache with the index (the TIFF-fragment lesson: build once per
+    # corpus, measured 6.5 -> ~1.5 s per invocation).
+    def build_frags() -> dict:
         cd = ", ".join(
             _dist_structs_sql(
                 "qqv",
@@ -751,7 +716,7 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(_PQ_SUB)
             for j in range(_PQ_CENTS)
         )
-        frags = {
+        return {
             # nprobe pick with NO window shuffle: array_sort orders the
             # (d, cid) structs lexicographically — exactly the
             # dist-then-lower-cid rule — and slice keeps the first
@@ -767,8 +732,10 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qres": F.expr(f"explode(array({qres}))"),
             "adct": F.expr(f"explode(array({adct_entries}))"),
         }
-        if not lazy:
-            _IVFPQ_CACHE[(base, "exprs")] = frags
+
+    frags = artifacts.get_or_build(
+        spark, "clustering.ivfpq_exprs", build_frags, sf_dir=sf_dir
+    )
 
     # plain projection — the probe pick below derives its own cell
     # distances, so running _km_assign here would pay K assignment
@@ -822,8 +789,6 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id", "rank")
     )
-    if not lazy:
-        _IVFPQ_CACHE[(base, "plan")] = out
     return out
 
 
@@ -932,39 +897,38 @@ def _sd_cluster_pairs(pdf):
     )
 
 
-# ((artifact_cache_key, k), side relation) — the live checkpointed
-# (vec_id, cluster, qs) relation the per-cluster pair stage consumes. The cluster ASSIGNMENT is the expensive per-invocation step
-# (a K=64 literal-centroid argmin fold over every vector — measured
-# 1.1 s/invocation at sf0.1 even warm), and it is a pure function of
-# the input files: a SemDeDup deployment assigns clusters once at
-# ingest, so the relation caches under the materialized-view contract
-# (the sim-search-ivf "assigned" precedent — truncated-lineage
-# executor-loss trade documented there).
-_SD_SIDE_CACHE: dict = {}
-
-
 def _sd_side(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    global _SD_SIDE_CACHE
-    cache_key = (artifact_cache_key(spark, sf_dir), _SD_K)
-    cached = _SD_SIDE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    _SD_SIDE_CACHE.clear()  # one live corpus (the _KM_CACHE policy)
-    qdf, cents = _km_model(
-        spark, sf_dir, _SD_K, assign=_np_assign, rounds=_SD_ROUNDS
+    """The persisted (vec_id, cluster, qs) relation the per-cluster pair
+    stage consumes. The cluster ASSIGNMENT is the expensive
+    per-invocation step (a K=64 literal-centroid argmin fold over every
+    vector — measured 1.1 s/invocation at sf0.1 even warm), and it is a
+    pure function of the input files: a SemDeDup deployment assigns
+    clusters once at ingest, so the relation is an artifact of its own
+    (the sim-search-ivf "assigned" precedent)."""
+
+    def build() -> DataFrame:
+        qdf, cents = _km_model(
+            spark, sf_dir, _SD_K, assign=_np_assign, rounds=_SD_ROUNDS
+        )
+        asg = _np_assign(qdf, cents).select("vec_id", "cluster")
+        qs = emb.select(
+            "vec_id",
+            F.transform(
+                "embedding",
+                lambda x: F.floor(x.cast("double") * _SD_QSCALE + F.lit(0.5)),
+            ).alias("qs"),
+        )
+        side = asg.join(qs, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+        side.count()  # eager populate (gemm stage reads it per cluster)
+        return side
+
+    return artifacts.get_or_build(
+        spark,
+        "clustering.semdedup_side",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
     )
-    asg = _np_assign(qdf, cents).select("vec_id", "cluster")
-    qs = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * _SD_QSCALE + F.lit(0.5)),
-        ).alias("qs"),
-    )
-    side = asg.join(qs, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
-    side.count()  # eager populate (gemm stage reads it per cluster)
-    _SD_SIDE_CACHE[cache_key] = side
-    return side
 
 
 def _sd_oracle() -> str:

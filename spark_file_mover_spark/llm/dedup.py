@@ -40,10 +40,10 @@ from spark_file_mover_spark.llm.text import (
     _WIN_PBITS,
     _WIN_W,
 )
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.numerics import snap
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
     load_table,
     plan_cached,
     scan_partitions,
@@ -117,36 +117,19 @@ _MAX_BUCKET = 100  # drop degenerate buckets: near-universal signatures
 _rng = random.Random(42)
 _PERMS = [(_rng.randrange(1, 1 << 30), _rng.randrange(0, _P)) for _ in range(_BANDS * _ROWS)]
 
-# ((appId, sf_dir), bands) — the live persisted banded-signature relation
-# (the phash-bands materialized-view contract: a pure function of the
-# immutable input files, reused while the key matches, unpersisted and
-# rebuilt when the corpus or context changes)
-_last_bands = None
-
-# ((appId, sf_dir), nh_rel) — the live checkpointed normalized-hash
-# relation the minhash audit consumes (same contract)
-_last_nh_rel = None
-
-# ((appId, sf_dir), (m_bits, bloom)) — the live persisted cross-corpus
-# Bloom summary (same contract)
-_last_bloom = None
-
-# Reusable unresolved-expression fragments, built once per SparkContext
-# (py4j Column construction is pure driver latency — the k permuted-min
-# aggregates plus the band-struct array cost ~150 gateway round trips,
-# a measured slice of the ~0.6 s plan build this key paid per
-# invocation). Unresolved Columns are immutable expression trees bound
-# to no plan, so reuse across queries is safe; the cache keys on
-# applicationId (a unique string per context — id() would be recyclable)
-# so a restarted JVM rebuilds its fragments.
-_EXPR_CACHE: dict[str, dict[str, object]] = {}
 
 
 def _expr_fragments(spark: SparkSession) -> dict:
-    app = spark.sparkContext.applicationId
-    frags = _EXPR_CACHE.get(app)
-    if frags is None:
-        _EXPR_CACHE.clear()  # at most one live context per process
+    """Reusable unresolved-expression fragments, built once per
+    SparkContext (py4j Column construction is pure driver latency — the
+    k permuted-min aggregates plus the band-struct array cost ~150
+    gateway round trips, a measured slice of the ~0.6 s plan build this
+    key paid per invocation). Unresolved Columns are immutable
+    expression trees bound to no plan, so reuse across queries is safe;
+    the artifact store keys them on applicationId so a restarted JVM
+    rebuilds its fragments."""
+
+    def build() -> dict:
         aggs = [
             F.min(F.pmod(a * F.col("h") + b, F.lit(_P))).alias(f"mh{i}")
             for i, (a, b) in enumerate(_PERMS)
@@ -162,9 +145,9 @@ def _expr_fragments(spark: SparkSession) -> dict:
                 for b in range(_BANDS)
             ]
         )
-        frags = {"aggs": aggs, "band_arr": band_arr}
-        _EXPR_CACHE[app] = frags
-    return frags
+        return {"aggs": aggs, "band_arr": band_arr}
+
+    return artifacts.get_or_build(spark, "dedup.minhash_exprs", build)
 
 
 def _minhash_signatures(d: DataFrame) -> DataFrame:
@@ -259,17 +242,18 @@ def _nh_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan previously paid FOUR same-signature documents scans (bloom
     build, probe, verify reference, and the un-persisted candidate
     relation consumed twice), caught by the registry-wide scan gate."""
-    global _last_nh_rel
-    nh_key = artifact_cache_key(spark, sf_dir)
-    if _last_nh_rel is not None and _last_nh_rel[0] == nh_key:
-        return _last_nh_rel[1]
-    d = load_table(spark, sf_dir, "documents")
-    nh_rel = d.select("doc_id", _norm_hash().alias("nh")).persist(
-        StorageLevel.MEMORY_AND_DISK
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        nh_rel = d.select("doc_id", _norm_hash().alias("nh")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        nh_rel.count()  # eager: exact edges + signatures both read it
+        return nh_rel
+
+    return artifacts.get_or_build(
+        spark, "dedup.nh_rel", build, sf_dir=sf_dir, release=artifacts.unpersist
     )
-    nh_rel.count()  # eager: exact edges + signatures both read it
-    _last_nh_rel = (nh_key, nh_rel)
-    return nh_rel
 
 
 def minhash_clusters(
@@ -350,7 +334,6 @@ def _minhash_cluster_sparse(
     exact-dup edge). Split out so the audit query can complete it against
     its own already-materialized ``nh_rel`` instead of paying a second
     completion join."""
-    global _last_bands
     from pyspark.sql import Window as W
 
     # exact edges via ONE window over nh: min(doc_id) per normalized-text
@@ -374,56 +357,52 @@ def _minhash_cluster_sparse(
         .select("e.doc_id", "e.nb")
     )
     # bands is consumed three times (guard window + both sides of the
-    # self-join) AND across invocations (keyed on (appId, sf_dir) — a
-    # pure function of the immutable input files, so repeat invocations
-    # against the same corpus reuse it instead of re-running the shingle
-    # explode + signature aggregation). MEMORY_AND_DISK: spills instead
-    # of OOM on wide corpora. The previous key's relation is released
-    # here — the returned plan is LAZY, so release cannot happen at the
-    # end of the call without forcing a blocking materialization on the
-    # hot path (r02 bench leaked one relation per invocation before).
-    bands_key = artifact_cache_key(spark, sf_dir)
-    if _last_bands is not None and _last_bands[0] == bands_key:
-        return _minhash_neighbor_mins(_last_bands[1], exact_edges)
-    if _last_bands is not None:
-        try:
-            _last_bands[1].unpersist()
-        except Exception:
-            pass  # previous relation may belong to a stopped SparkSession
-        _last_bands = None
-    sig = _minhash_signatures(d)
+    # self-join) AND across invocations (a pure function of the
+    # immutable input files, so repeat invocations against the same
+    # corpus reuse it instead of re-running the shingle explode +
+    # signature aggregation). MEMORY_AND_DISK: spills instead of OOM on
+    # wide corpora. The superseded key's relation is released by the
+    # store on a miss — the returned plan is LAZY, so release cannot
+    # happen at the end of the call without forcing a blocking
+    # materialization on the hot path (r02 bench leaked one relation
+    # per invocation before).
+    def build() -> DataFrame:
+        sig = _minhash_signatures(d)
 
-    # Oversized-bucket guard, window form, INSIDE the cached relation
-    # (r6): a count window over (band, sig) filters degenerate
-    # signatures, and the persist boundary sits AFTER the filter — the
-    # window's (band, sig) exchange runs exactly once, when the cache
-    # populates. r5 persisted the pre-guard explode output and let the
-    # self-join sides share the guard's exchange, but AQE converts the
-    # within-bucket self-join to a BroadcastHashJoin at runtime (the
-    # guarded relation is small), and a broadcast build side cannot
-    # reuse the probe side's exchange — so each join side re-ran the
-    # window (plan-verified: two identical Sort+Window+Exchange
-    # subtrees). With the guard cached, both sides are plain
-    # InMemoryTableScans and the pair join needs NO new shuffle under
-    # BHJ. Honest trade-off vs the r4 agg+broadcast-anti-join guard
-    # still applies: the oversized-bucket mass crosses the one guard
-    # exchange before the filter drops it — boilerplate-dominated
-    # corpora where that mass dominates should flip back to the
-    # aggregate guard; the pair stage stays linear either way.
-    w_bucket = W.partitionBy("band", "sig")
-    cached = (
-        sig.select(
-            "doc_id",
-            F.explode(_expr_fragments(spark)["band_arr"]).alias("bs"),
+        # Oversized-bucket guard, window form, INSIDE the cached relation
+        # (r6): a count window over (band, sig) filters degenerate
+        # signatures, and the persist boundary sits AFTER the filter — the
+        # window's (band, sig) exchange runs exactly once, when the cache
+        # populates. r5 persisted the pre-guard explode output and let the
+        # self-join sides share the guard's exchange, but AQE converts the
+        # within-bucket self-join to a BroadcastHashJoin at runtime (the
+        # guarded relation is small), and a broadcast build side cannot
+        # reuse the probe side's exchange — so each join side re-ran the
+        # window (plan-verified: two identical Sort+Window+Exchange
+        # subtrees). With the guard cached, both sides are plain
+        # InMemoryTableScans and the pair join needs NO new shuffle under
+        # BHJ. Honest trade-off vs the r4 agg+broadcast-anti-join guard
+        # still applies: the oversized-bucket mass crosses the one guard
+        # exchange before the filter drops it — boilerplate-dominated
+        # corpora where that mass dominates should flip back to the
+        # aggregate guard; the pair stage stays linear either way.
+        w_bucket = W.partitionBy("band", "sig")
+        return (
+            sig.select(
+                "doc_id",
+                F.explode(_expr_fragments(spark)["band_arr"]).alias("bs"),
+            )
+            .select("doc_id", "bs.band", "bs.sig")
+            .withColumn("bn", F.count("*").over(w_bucket))
+            .filter(F.col("bn") <= _MAX_BUCKET)
+            .drop("bn")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        .select("doc_id", "bs.band", "bs.sig")
-        .withColumn("bn", F.count("*").over(w_bucket))
-        .filter(F.col("bn") <= _MAX_BUCKET)
-        .drop("bn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    bands = artifacts.get_or_build(
+        spark, "dedup.bands", build, sf_dir=sf_dir, release=artifacts.unpersist
     )
-    _last_bands = (bands_key, cached)
-    return _minhash_neighbor_mins(cached, exact_edges)
+    return _minhash_neighbor_mins(bands, exact_edges)
 
 
 def _minhash_neighbor_mins(
@@ -712,11 +691,6 @@ FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id
 """
 
 
-#: (artifact_cache_key, labels DataFrame) for the last-built closure —
-#: the per-(app, sf_dir) paid-once artifact cache (minhash precedent).
-_last_components = None
-
-
 @query("dedup-components", oracle=_COMPONENTS_ORACLE)
 @plan_cached("dedup-components")
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -741,14 +715,14 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     final documents join, exactly like a production dedup run reads
     the closure it wrote at ingest instead of re-flooding the graph.
     """
-    global _last_components
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if _last_components is not None and _last_components[0] == cache_key:
-        labels = _last_components[1]
-    else:
-        pairs = dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
-        labels = connected_components(pairs)
-        _last_components = (cache_key, labels)
+    labels = artifacts.get_or_build(
+        spark,
+        "dedup.components",
+        lambda: connected_components(
+            dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
+        ),
+        sf_dir=sf_dir,
+    )
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return (
         d.join(labels, "doc_id", "left")
@@ -886,11 +860,6 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
 """
 
 
-# ((appId, corpus fingerprint), expl) — the live persisted exploded
-# gram-hash relation (the _last_cont_er contract)
-_last_jac_expl = None
-
-
 @query("dedup-ngram-jaccard", oracle=_JACCARD_ORACLE)
 @plan_cached("dedup-ngram-jaccard")
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,28 +886,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment's guarded shingles (one live entry, replayable
     lineage); the pair join + Jaccard scoring — the verify operator —
     run on every invocation."""
-    global _last_jac_expl
     from spark_file_mover_spark import checkpoints
 
-    # ADVICE r15: the persisted ingest relation is bypassed in BOTH
-    # directions under the plan-only tooling mode — no corpus tokenize
-    # jobs from dump tooling (the r11 zero-jobs invariant), no
-    # tooling-shaped entry leaking into production hits.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if (
-        not lazy
-        and _last_jac_expl is not None
-        and _last_jac_expl[0] == cache_key
-    ):
-        expl = _last_jac_expl[1]
-    else:
-        if _last_jac_expl is not None and not lazy:
-            try:  # ADVICE r15: release the stale blocks (the _tf_cache
-                _last_jac_expl[1].unpersist()  # eviction pattern)
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_jac_expl = None
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         grams = F.array_distinct(
             F.slice(toks(), 1, 20)
@@ -953,10 +903,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id", "lang", "source", "n", F.xxhash64("gs").alias("g")
         )
-        if not lazy:
-            expl = expl.persist(StorageLevel.MEMORY_AND_DISK)
-            expl.count()  # eager: pay the ingest tokenize once
-            _last_jac_expl = (cache_key, expl)
+        # ADVICE r15: no corpus tokenize jobs under the plan-only
+        # tooling mode (the r11 zero-jobs invariant; the store itself
+        # is bypassed there, so nothing tooling-shaped is kept)
+        if checkpoints.LAZY_ACTIVE:
+            return expl
+        expl = expl.persist(StorageLevel.MEMORY_AND_DISK)
+        expl.count()  # eager: pay the ingest tokenize once
+        return expl
+
+    expl = artifacts.get_or_build(
+        spark,
+        "dedup.jaccard_grams",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
     inter = (
         expl.alias("a")
         .join(
@@ -1130,16 +1092,6 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_K = 5  # k-gram width for span detection
 
 
-# ((appId, sf_dir), (t, g, dp)) — the live persisted span-family
-# relations (tokenized view, id-only gram hashes, duplicated-gram
-# positions): pure functions of the immutable input files, so they
-# follow the minhash/phash-bands materialized-view contract — reused
-# across invocations while the key matches, unpersisted and rebuilt
-# when the corpus or context changes. Serial driver/bench use, not
-# concurrency-safe.
-_span_cache = None
-
-
 def _span_shared(spark: SparkSession, sf_dir: str):
     """(t, g, dp): the persisted relations both span-family keys start
     from.
@@ -1169,34 +1121,28 @@ def _span_shared(spark: SparkSession, sf_dir: str):
     persist-g-only 1.18 s min, with the cold first rep 1.2 vs 5.8 s.
     Flip to recompute if cache pressure ever dominates — results are
     identical either way."""
-    global _span_cache
-    key = artifact_cache_key(spark, sf_dir)
-    if _span_cache is not None and _span_cache[0] == key:
-        return _span_cache[1]
-    if _span_cache is not None:
-        for rel in _span_cache[1]:
-            try:
-                rel.unpersist()
-            except Exception:
-                pass  # previous relations may belong to a stopped session
-        _span_cache = None
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if scan_partitions(d) < par:
-        t = t.repartition(par)
-    t = (
-        t.select("doc_id", toks().alias("toks"))
-        .withColumn(
-            "n_grams",
-            F.greatest(F.size("toks") - (_SPAN_K - 1), F.lit(0)),
+
+    def build() -> tuple:
+        d = load_table(spark, sf_dir, "documents")
+        t = d.select("doc_id", "text")
+        par = spark.sparkContext.defaultParallelism
+        if scan_partitions(d) < par:
+            t = t.repartition(par)
+        t = (
+            t.select("doc_id", toks().alias("toks"))
+            .withColumn(
+                "n_grams",
+                F.greatest(F.size("toks") - (_SPAN_K - 1), F.lit(0)),
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        g = _span_gram_relation(t).persist(StorageLevel.MEMORY_AND_DISK)
+        dp = _span_dup_positions(g).persist(StorageLevel.MEMORY_AND_DISK)
+        return t, g, dp
+
+    return artifacts.get_or_build(
+        spark, "dedup.span", build, sf_dir=sf_dir, release=artifacts.unpersist
     )
-    g = _span_gram_relation(t).persist(StorageLevel.MEMORY_AND_DISK)
-    dp = _span_dup_positions(g).persist(StorageLevel.MEMORY_AND_DISK)
-    _span_cache = (key, (t, g, dp))
-    return t, g, dp
 
 
 def _span_gram_relation(t: DataFrame) -> DataFrame:
@@ -1552,7 +1498,6 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r8 materialized-view contract: the sizing count and the bitmap
     aggregate run once per corpus, and repeat invocations pay only the
     probe + verify joins."""
-    global _last_bloom
     # r12: ride the shared persisted (doc_id, nh) relation — the cold
     # plan previously re-scanned documents four times (registry-wide
     # scan-gate catch); now the corpus pass is the one _nh_relation
@@ -1569,17 +1514,7 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    bloom_key = artifact_cache_key(spark, sf_dir)
-    if _last_bloom is not None and _last_bloom[0] == bloom_key:
-        m_bits, bloom = _last_bloom[1]
-    else:
-        if _last_bloom is not None:
-            try:
-                _last_bloom[1][1].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_bloom = None
-
+    def build() -> tuple:
         n_ref = ref.count()
         m_bits = min(
             _BLOOM_MAX_BITS,
@@ -1600,7 +1535,11 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.bit_or("bit").alias("bitmap"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _last_bloom = (bloom_key, (m_bits, bloom))
+        return m_bits, bloom
+
+    m_bits, bloom = artifacts.get_or_build(
+        spark, "dedup.bloom", build, sf_dir=sf_dir, release=artifacts.unpersist
+    )
     pos_arr = bloom_positions(m_bits)
     ppos = probe.select(
         "doc_id", "nh", F.explode(pos_arr).alias("pos")
@@ -1743,85 +1682,85 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash/phash/span materialized-view contract (r8): scan,
     tokenization, gram hashing and the hot-shingle guard are the
     ingest cost; repeat invocations pay only the pair join + ranking.
-    Checkpointed blocks of an evicted entry release via the
-    ContextCleaner when the reference drops."""
-    global _last_cont_er
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if _last_cont_er is not None and _last_cont_er[0] == cache_key:
-        return _containment_query(_last_cont_er[1])
-    _last_cont_er = None
-    d = load_table(spark, sf_dir, "documents")
-    # pin the token array behind a Generate barrier BEFORE the shingle
-    # lambda touches it: element_at inside transform() inlines its
-    # argument, so an unpinned toks() re-runs the regex split per
-    # element access — 4 accesses x ~90 shingles = ~360 splits of the
-    # full text per row (measured 27 s of the ungated 57 s at sf0.1;
-    # pinned, the split runs once per row)
-    base = d.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.explode(F.array(F.struct(toks().alias("t")))).alias("s"),
-    ).select("doc_id", "lang", "source", F.col("s.t").alias("tk"))
-    tk = F.col("tk")
-    grams = F.when(
-        F.size(tk) >= _CONT_N,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(tk) - (_CONT_N - 1)),
-                lambda i: F.concat_ws(
-                    " ",
-                    *[
-                        F.element_at(tk, (i + off).cast("int"))
-                        for off in range(_CONT_N)
-                    ],
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = base.select("doc_id", "lang", "source", grams.alias("grams"))
-    # shingles leave the scan as 8-byte xxhash64 keys, never strings
-    # (the text-decontaminate contract: the string-joining oracle
-    # certifies the hash key — a collision would fail the driver's
-    # value compare)
-    exploded = sh.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.explode(
-            F.transform("grams", lambda g: F.xxhash64(g))
-        ).alias("g"),
-    )
-    # hot-shingle guard (the LSH oversized-bucket discipline, gram-
-    # frequency flavored): a shingle in > MAXDF docs of its block is
-    # boilerplate — it carries no containment signal and its pair
-    # fanout is df² (the ungated join measured 57 s at sf0.1; gated,
-    # fanout per gram is bounded at MAXDF²). The measure becomes
-    # containment over INFORMATIVE shingles — numerator and
-    # denominator both restrict, mirrored in the oracle.
-    from pyspark.sql import Window as WG  # one import serves guard + ranking
+    The artifact store unpersists a superseded entry."""
 
-    er = (
-        exploded.withColumn(
-            "dfg",
-            F.count("*").over(WG.partitionBy("lang", "source", "g")),
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # pin the token array behind a Generate barrier BEFORE the shingle
+        # lambda touches it: element_at inside transform() inlines its
+        # argument, so an unpinned toks() re-runs the regex split per
+        # element access — 4 accesses x ~90 shingles = ~360 splits of the
+        # full text per row (measured 27 s of the ungated 57 s at sf0.1;
+        # pinned, the split runs once per row)
+        base = d.select(
+            "doc_id",
+            "lang",
+            "source",
+            F.explode(F.array(F.struct(toks().alias("t")))).alias("s"),
+        ).select("doc_id", "lang", "source", F.col("s.t").alias("tk"))
+        tk = F.col("tk")
+        grams = F.when(
+            F.size(tk) >= _CONT_N,
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(tk) - (_CONT_N - 1)),
+                    lambda i: F.concat_ws(
+                        " ",
+                        *[
+                            F.element_at(tk, (i + off).cast("int"))
+                            for off in range(_CONT_N)
+                        ],
+                    ),
+                )
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+        sh = base.select("doc_id", "lang", "source", grams.alias("grams"))
+        # shingles leave the scan as 8-byte xxhash64 keys, never strings
+        # (the text-decontaminate contract: the string-joining oracle
+        # certifies the hash key — a collision would fail the driver's
+        # value compare)
+        exploded = sh.select(
+            "doc_id",
+            "lang",
+            "source",
+            F.explode(
+                F.transform("grams", lambda g: F.xxhash64(g))
+            ).alias("g"),
         )
-        .filter(F.col("dfg") <= _CONT_MAXDF)
-        .drop("dfg")
-        # three consumers (both join sides + sizes) plus the cross-
-        # invocation cache; persist(MEMORY_AND_DISK) keeps replayable
-        # lineage so executor loss between invocations recomputes
-        # instead of failing later hits (see llm/similarity.py's IVF
-        # cache note); blocks release when the cache evicts
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # hot-shingle guard (the LSH oversized-bucket discipline, gram-
+        # frequency flavored): a shingle in > MAXDF docs of its block is
+        # boilerplate — it carries no containment signal and its pair
+        # fanout is df² (the ungated join measured 57 s at sf0.1; gated,
+        # fanout per gram is bounded at MAXDF²). The measure becomes
+        # containment over INFORMATIVE shingles — numerator and
+        # denominator both restrict, mirrored in the oracle.
+        from pyspark.sql import Window as WG  # one import serves guard + ranking
+
+        er = (
+            exploded.withColumn(
+                "dfg",
+                F.count("*").over(WG.partitionBy("lang", "source", "g")),
+            )
+            .filter(F.col("dfg") <= _CONT_MAXDF)
+            .drop("dfg")
+            # three consumers (both join sides + sizes) plus the cross-
+            # invocation cache; persist(MEMORY_AND_DISK) keeps replayable
+            # lineage so executor loss between invocations recomputes
+            # instead of failing later hits (see llm/similarity.py's IVF
+            # cache note); blocks release when the cache evicts
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        er.count()  # eager: both join sides + sizes read er in one job
+        return er
+
+    er = artifacts.get_or_build(
+        spark,
+        "dedup.containment_shingles",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
     )
-    er.count()  # eager: both join sides + sizes read er in one job
-    _last_cont_er = (cache_key, er)
     return _containment_query(er)
-
-
-# ((appId, sf_dir), er) — the live checkpointed guarded-shingle relation
-_last_cont_er = None
 
 
 def _containment_query(er: DataFrame) -> DataFrame:
@@ -1881,10 +1820,6 @@ def _containment_query(er: DataFrame) -> DataFrame:
 # _ED_MAX_DOCS_PER_FP docs are dropped before the pair join — the
 # text-containment hot-shingle guard, fingerprint-flavored (a boilerplate
 # fingerprint in d docs is C(d,2) pairs).
-# ((appId, corpus fingerprint), fpc) — the live persisted guarded
-# winnowing-fingerprint relation (the _last_bands contract)
-_last_edfp = None
-
 _ED_MIN_SHARED = 3
 _ED_MAX_DOCS_PER_FP = 32
 # accept pairs with levenshtein <= 20% of the longer string — compared
@@ -2048,17 +1983,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus, cached per (appId, corpus fingerprint) like the minhash
     # bands relation; the hot-fingerprint guard sits INSIDE the cache
     # boundary (window form — its h40 exchange runs once, at populate).
-    global _last_edfp
-    ed_key = artifact_cache_key(spark, sf_dir)
-    if _last_edfp is not None and _last_edfp[0] == ed_key:
-        fpc = _last_edfp[1]
-    else:
-        if _last_edfp is not None:
-            try:
-                _last_edfp[1].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_edfp = None
+    def build() -> DataFrame:
         fp = (
             g.select("doc_id", "pos", F.min(key).over(w).alias("kmin"))
             .filter(F.col("pos") >= _WIN_W - 1)
@@ -2068,7 +1993,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        fpc = (
+        return (
             fp.withColumn(
                 "nd", F.count("*").over(W.partitionBy("h40"))
             )
@@ -2076,7 +2001,14 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("nd")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _last_edfp = (ed_key, fpc)
+
+    fpc = artifacts.get_or_build(
+        spark,
+        "dedup.edit_fingerprints",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
     cand = (
         fpc.alias("a")
         .join(

@@ -29,56 +29,39 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table
+from spark_file_mover_spark.sources.io import cached_plan, load_table
 
 # ---------------------------------------------------------------------------
 # Synthetic asset corpora, materialized once per (SparkContext, sf_dir)
 # ---------------------------------------------------------------------------
-
-# (applicationId, family, sf_dir) -> parquet dir. Single live artifact
-# per family per app (the scan-dpp-join / sink-compact setup lifecycle):
-# a stale key — dead SparkContext, or the same family pointed at another
-# sf_dir — rmtree-evicts its directory before the new one lands.
-_ASSET_DIR_CACHE: dict[tuple, str] = {}
-
-# ((appId, corpus fingerprint), family) -> built (lazy) parse DataFrame.
-# PLAN cache, not result cache: the header walk executes on EVERY
-# action against the on-disk corpus — only the Column-tree construction
-# (~100 py4j round trips + one eager analysis per key, profiled at
-# 0.3-0.7 s/invocation) is paid once per (SparkContext, corpus), the
-# _TIFF_EXPR_CACHE / IVF-PQ-fragment discipline applied to the whole
-# projection. One live entry per family (the _ASSET_DIR_CACHE policy).
-_ASSET_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _asset_query(
     spark: SparkSession, sf_dir: str, family: str, build, parse
 ) -> DataFrame:
     """Parsed-metadata query over a family's asset corpus: corpus via
-    :func:`_asset_corpus` (written once per context), parse plan built
-    once per (SparkContext, corpus) and re-executed per action.
-    ``build`` is the zero-arg corpus synthesizer; ``parse`` maps the
-    corpus scan to the declared output relation."""
-    key = (artifact_cache_key(spark, sf_dir), family)
-    df = _ASSET_PLAN_CACHE.get(key)
-    if df is None:
-        for k in [
-            k for k in _ASSET_PLAN_CACHE if k[1] == family and k != key
-        ]:
-            del _ASSET_PLAN_CACHE[k]
-        df = parse(_asset_corpus(spark, sf_dir, family, build))
-        _ASSET_PLAN_CACHE[key] = df
-        return df
-    # HIT: fresh no-op projection, not the stored (possibly executed)
-    # Dataset — see sources.io.cached_plan for why (AQE final-plan
-    # rendering would make explain order-dependent)
-    return df.select("*")
+    :func:`_asset_corpus` (written once per corpus), parse plan built
+    once per (SparkContext, corpus) and re-executed per action — a
+    PLAN cache, not a result cache: the header walk executes on EVERY
+    action against the on-disk corpus; only the Column-tree
+    construction (~100 py4j round trips + one eager analysis per key,
+    profiled at 0.3-0.7 s/invocation) is paid once. ``build`` is the
+    zero-arg corpus synthesizer; ``parse`` maps the corpus scan to the
+    declared output relation."""
+    return cached_plan(
+        spark,
+        sf_dir,
+        f"multimodal.{family}.plan",
+        lambda: parse(_asset_corpus(spark, sf_dir, family, build)),
+    )
 
 
 def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     """Return the synthetic ``(asset_id, content)`` asset corpus as a
-    parquet-backed relation, written ONCE per (SparkContext, sf_dir).
+    parquet-backed relation, written ONCE per (SparkContext, corpus)
+    into a temp-dir artifact.
 
     The asset bytes are a pure function of the immutable documents
     input — in a real pipeline, corpus ingest lands the binary assets
@@ -93,23 +76,15 @@ def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     ``build`` is a zero-arg callable returning the assets DataFrame to
     materialize; it is only invoked on a cache miss.
     """
-    import shutil
 
-    app = spark.sparkContext.applicationId
-    key = (app, family, sf_dir)
-    path = _ASSET_DIR_CACHE.get(key)
-    if path is None:
-        stale = [
-            k
-            for k in _ASSET_DIR_CACHE
-            if k[0] != app or (k[1] == family and k != key)
-        ]
-        for k in stale:
-            shutil.rmtree(_ASSET_DIR_CACHE.pop(k), ignore_errors=True)
-        base = tempfile.mkdtemp(prefix=f"sfm-assets-{family}-")
-        path = base + "/assets"
-        build().write.parquet(path)
-        _ASSET_DIR_CACHE[key] = path
+    def write() -> str:
+        path = tempfile.mkdtemp(prefix=f"sfm-assets-{family}-")
+        build().write.mode("overwrite").parquet(path)
+        return path
+
+    path = artifacts.get_or_build_dir(
+        spark, f"multimodal.{family}.assets", write, sf_dir=sf_dir
+    )
     return spark.read.parquet(path)
 
 
@@ -513,7 +488,7 @@ def with_wav_meta(
     Driver latency: every hop applies the SAME unresolved expression
     over ``(content, _w)``, so the hop struct is built once and reused
     for all hops, and the fragments are cached per SparkContext (the
-    dedup ``_EXPR_CACHE`` pattern) — py4j Column construction for the
+    dedup minhash-fragment pattern) — py4j Column construction for the
     ~60 byte-read nodes was the dominant per-invocation cost
     (~1.2 s build+analyze vs ~0.7 s execute at sf0.1 before the
     cache)."""
@@ -533,23 +508,18 @@ def with_wav_meta(
     )
 
 
-# Unresolved-fragment cache for the WAV walk + the audio-meta synthesis
-# column, keyed on applicationId (same contract as dedup._EXPR_CACHE:
-# unresolved Columns are immutable trees bound to no plan, safe to reuse
-# across queries; a restarted JVM rebuilds).
-_WAV_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def _wav_fragments(spark: SparkSession, content: str, max_chunks: int) -> dict:
-    key = (spark.sparkContext.applicationId, content, max_chunks)
-    frags = _WAV_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    stale = [k for k in _WAV_EXPR_CACHE if k[0] != key[0]]
-    for k in stale:  # evict only dead-context keys: a clear() would also
-        del _WAV_EXPR_CACHE[k]  # drop the current app's synth entry stored
-        # moments earlier by multimodal_audio_meta (one wasted rebuild
-        # on the first call after a SparkContext restart — ADVICE r6)
+    """The WAV walk fragments, an expression artifact keyed on
+    applicationId: unresolved Columns are immutable trees bound to no
+    plan, safe to reuse across queries; a restarted JVM rebuilds."""
+    return artifacts.get_or_build(
+        spark,
+        f"multimodal.wav_exprs.{content}.{max_chunks}",
+        lambda: _wav_build(content, max_chunks),
+    )
+
+
+def _wav_build(content: str, max_chunks: int) -> dict:
     c = F.col(content)
     is_wav = (F.hex(c.substr(F.lit(1), F.lit(4))) == "52494646") & (
         F.hex(c.substr(F.lit(9), F.lit(4))) == "57415645"  # "WAVE"
@@ -599,9 +569,7 @@ def _wav_fragments(spark: SparkSession, content: str, max_chunks: int) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _WAV_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 # Oracle predicts the parsed metadata from the same doc_id formulas the
@@ -723,19 +691,16 @@ def _audio_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multimodal-video-meta — MP4/ISO-BMFF atom walk, no decode
 # ---------------------------------------------------------------------------
 
-# Unresolved-fragment cache for the MP4 walk + synthesis column (same
-# contract as _WAV_EXPR_CACHE: keyed on applicationId, stale-context
-# keys evicted individually so the current app's entries survive).
-_MP4_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def _mp4_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _MP4_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _MP4_EXPR_CACHE if k[0] != key[0]]:
-        del _MP4_EXPR_CACHE[k]
+    """The MP4 walk fragments, an expression artifact keyed on
+    applicationId (the WAV contract)."""
+    return artifacts.get_or_build(
+        spark, f"multimodal.mp4_exprs.{content}", lambda: _mp4_build(content)
+    )
+
+
+def _mp4_build(content: str) -> dict:
     c = F.col(content)
     nul = F.lit(None).cast("long")
     # ---- top-level box walk state: find the moov container -----------
@@ -823,14 +788,12 @@ def _mp4_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {
+    return {
         "init": init,
         "top_hop": top_hop,
         "inner_init": inner_init,
         "inner_hop": inner_hop,
     }
-    _MP4_EXPR_CACHE[key] = frags
-    return frags
 
 
 def with_mp4_meta(
@@ -941,9 +904,8 @@ def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _video_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MP4 corpus synthesis (runs only on an asset-corpus cache miss)."""
     d = load_table(spark, sf_dir, "documents")
-    synth_key = (spark.sparkContext.applicationId, "_video_synth")
-    cached = _MP4_EXPR_CACHE.get(synth_key)
-    if cached is None:
+
+    def build() -> dict:
         doc = F.col("doc_id")
         hex4 = lambda v: F.lpad(F.hex(v), 8, "0")  # noqa: E731
         hex2 = lambda v: F.lpad(F.hex(v), 4, "0")  # noqa: E731
@@ -1015,8 +977,9 @@ def _video_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_hex = F.concat(
             ftyp, free_top, moov, F.lit("000000086D646174")
         )
-        cached = {"payload_hex": payload_hex}
-        _MP4_EXPR_CACHE[synth_key] = cached
+        return {"payload_hex": payload_hex}
+
+    cached = artifacts.get_or_build(spark, "multimodal.mp4_synth_exprs", build)
     return d.select(
         F.col("doc_id").alias("asset_id"),
         F.unhex(cached["payload_hex"]).alias("content"),
@@ -1038,11 +1001,6 @@ _PHASH_BAND_BITS = 15  # 4 bands x 15 bits
 _PHASH_NBANDS = _PHASH_BITS // _PHASH_BAND_BITS
 _PHASH_MAX_BUCKET = 100  # oversized-bucket guard (flat-image boilerplate)
 _PHASH_HAMMING_MAX = 8  # near-dup threshold (~13% of 60 bits)
-
-# Unresolved-fragment cache for the dHash expression + band array, keyed
-# on applicationId (same contract as _WAV_EXPR_CACHE; stale-context keys
-# evicted on first use after a restart)
-_PHASH_EXPR_CACHE: dict[str, dict] = {}
 
 
 def _phash_sql(intdiv) -> str:
@@ -1135,31 +1093,31 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles); hamming verify is two ``bit_count(xor)`` instructions per
     candidate pair; clustering is one min-groupBy. The banded relation
     is persisted across its two self-join consumers (the minhash
-    ``_last_bands`` lifecycle contract): the A/B at sf0.1 is a tie at
+    bands lifecycle contract): the A/B at sf0.1 is a tie at
     steady state (1.09 vs 1.10 s min — the bands derive from one cheap
     column expression, unlike minhash's expensive shingle explode), but
     the persisted form runs the guard window ONCE where the recompute
     form runs it per join side, and measured ~0.2 s better over the
     cold 3-rep window the bench and driver actually observe.
     """
-    from pyspark import StorageLevel
-    from pyspark.sql import Window as W
+    # the pair/cluster/completion PLAN over the two persisted relations
+    # is itself invariant per (appId, corpus): built once, re-executed
+    # per action (construction cached; a hit returns a fresh no-op
+    # projection, avoiding the executed-Dataset AQE final-plan rendering)
+    return cached_plan(
+        spark, sf_dir, "dedup-image-phash", lambda: _phash_plan(spark, sf_dir)
+    )
 
-    global _last_phash_bands
-    d = load_table(spark, sf_dir, "documents")
-    # Unresolved-fragment cache (the _WAV_EXPR_CACHE contract, own dict
-    # so stale-context eviction runs whenever THIS key is first after a
-    # SparkContext restart — parking these in _MP4_EXPR_CACHE left dead
-    # py4j refs unevicted until an MP4-walk query happened to run):
-    # parsing the 60-term generated CASE expression through the SQL
-    # parser and building the band-struct array cost ~0.4 s of pure
-    # driver latency per invocation before the cache.
-    cache_key = spark.sparkContext.applicationId
-    frags = _PHASH_EXPR_CACHE.get(cache_key)
-    if frags is None:
-        for k in [k for k in _PHASH_EXPR_CACHE if k != cache_key]:
-            del _PHASH_EXPR_CACHE[k]
-        frags = {
+
+def _phash_fragments(spark: SparkSession) -> dict:
+    """The dHash expression + band array, an expression artifact keyed
+    on applicationId: parsing the 60-term generated CASE expression
+    through the SQL parser and building the band-struct array cost
+    ~0.4 s of pure driver latency per invocation before the cache."""
+    return artifacts.get_or_build(
+        spark,
+        "multimodal.phash_exprs",
+        lambda: {
             "phash": F.expr(_phash_sql(lambda a, b: f"({a} div {b})")),
             "band_arr": F.array(
                 *[
@@ -1172,49 +1130,40 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for b in range(_PHASH_NBANDS)
                 ]
             ),
-        }
-        _PHASH_EXPR_CACHE[cache_key] = frags
-    # (asset_id, phash) is consumed twice (banded blocking + the final
-    # completion join). A per-invocation localCheckpoint barrier
-    # measured SLOWER than re-evaluating the 120-node sampler per
-    # consumer (0.66 s vs 0.29 s/pass at sf0.1) — but r15 moves the
-    # relation into the SAME cross-invocation persist lifecycle as the
-    # bands below: the sampler pass is paid once per (appId, sf_dir)
-    # when the bands build first materializes it, and every
-    # invocation's completion join reads the cached 16-byte rows.
-    p = d.select(
-        F.col("doc_id").alias("asset_id"), frags["phash"].alias("phash")
+        },
     )
-    band_arr = frags["band_arr"]
-    # Guarded-bands MATERIALIZED VIEW, keyed (appId, sf_dir) — the
-    # _PR_GRAPH_CACHE contract: the banded relation is a pure function
-    # of immutable input files, so a repeat invocation against the same
-    # corpus reuses the persisted relation instead of re-running the
-    # sampler + band explode + guard window (the r7 sweep put the
-    # rebuild-every-time form at 2.07 s against the 2.0 s budget; the
-    # reused form pays only the pair join + completion join). A
-    # DIFFERENT sf_dir (or restarted context) evicts and unpersists the
-    # stale entry — serial driver/bench use, exactly one live relation.
-    bands_key = (cache_key, sf_dir)
-    if _last_phash_bands is not None and _last_phash_bands[0] == bands_key:
-        # the pair/cluster/completion PLAN over the two persisted
-        # relations is itself invariant per (appId, sf_dir): return a
-        # fresh no-op projection over the plan built on the first
-        # invocation (the _ASSET_PLAN_CACHE discipline — construction
-        # cached, execution per action; select("*") avoids the
-        # executed-Dataset AQE final-plan rendering)
-        return _last_phash_bands[3].select("*")
-    else:
-        if _last_phash_bands is not None:
-            try:
-                _last_phash_bands[1].unpersist()
-                _last_phash_bands[2].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_phash_bands = None
-        p = p.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _phash_relations(spark: SparkSession, sf_dir: str) -> tuple:
+    """(bands, p): the guarded-bands MATERIALIZED VIEW and the
+    (asset_id, phash) relation it is built from — pure functions of
+    immutable input files, so a repeat invocation against the same
+    corpus reuses the persisted relations instead of re-running the
+    sampler + band explode + guard window (the r7 sweep put the
+    rebuild-every-time form at 2.07 s against the 2.0 s budget; the
+    reused form pays only the pair join + completion join).
+
+    (asset_id, phash) is consumed twice (banded blocking + the final
+    completion join). A per-invocation localCheckpoint barrier measured
+    SLOWER than re-evaluating the 120-node sampler per consumer (0.66 s
+    vs 0.29 s/pass at sf0.1) — but r15 moves the relation into the SAME
+    cross-invocation persist lifecycle as the bands: the sampler pass
+    is paid once per (appId, corpus) when the bands build first
+    materializes it, and every invocation's completion join reads the
+    cached 16-byte rows."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Window as W
+
+    def build() -> tuple:
+        frags = _phash_fragments(spark)
+        d = load_table(spark, sf_dir, "documents")
+        p = d.select(
+            F.col("doc_id").alias("asset_id"), frags["phash"].alias("phash")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         bands = (
-            p.select("asset_id", "phash", F.explode(band_arr).alias("bs"))
+            p.select(
+                "asset_id", "phash", F.explode(frags["band_arr"]).alias("bs")
+            )
             .select("asset_id", "phash", "bs.band", "bs.bits")
             .withColumn(
                 "bn", F.count("*").over(W.partitionBy("band", "bits"))
@@ -1223,6 +1172,19 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("bn")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        return bands, p
+
+    return artifacts.get_or_build(
+        spark,
+        "multimodal.phash_bands",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
+
+
+def _phash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    bands, p = _phash_relations(spark, sf_dir)
     pairs = (
         bands.alias("l")
         .join(bands.alias("r"), ["band", "bits"])
@@ -1256,15 +1218,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cluster_id"),
         F.col("min_nb").isNotNull().alias("has_near_dup"),
     )
-    _last_phash_bands = (bands_key, bands, p, out)
     return out
-
-
-# ((appId, sf_dir), bands, phash-relation, completion-plan) — the live
-# persisted phash band + (asset_id, phash) relations plus the built
-# pair/cluster/completion DataFrame over them; reused while the key
-# matches, unpersisted and rebuilt when it changes
-_last_phash_bands = None
 
 
 # ---------------------------------------------------------------------------
@@ -1328,21 +1282,17 @@ def with_tiff_meta(df: DataFrame, content: str = "content") -> DataFrame:
     )
 
 
-# Unresolved-fragment cache for the TIFF walk Columns, keyed on
-# (applicationId, content column name) — the _WAV_EXPR_CACHE contract:
-# the walk trees are name-based and plan-independent, and their py4j
-# construction (~1.4 s at first build) was the dominant per-invocation
-# cost before the cache. Stale-context keys evicted on first use.
-_TIFF_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def _tiff_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _TIFF_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _TIFF_EXPR_CACHE if k[0] != key[0]]:
-        del _TIFF_EXPR_CACHE[k]
+    """The TIFF walk Columns, an expression artifact per content column
+    name (the WAV contract): the walk trees are name-based and
+    plan-independent, and their py4j construction (~1.4 s at first
+    build) was the dominant per-invocation cost before the cache."""
+    return artifacts.get_or_build(
+        spark, f"multimodal.tiff_exprs.{content}", lambda: _tiff_build(content)
+    )
+
+
+def _tiff_build(content: str) -> dict:
     c = F.col(content)
     le = F.hex(c.substr(F.lit(1), F.lit(2))) == "4949"
     be = F.hex(c.substr(F.lit(1), F.lit(2))) == "4D4D"
@@ -1391,9 +1341,7 @@ def _tiff_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _TIFF_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 # Oracle predicts the parse from the same doc_id formulas the
@@ -1433,7 +1381,7 @@ def multimodal_image_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-only, zero shuffle, zero Python — fused into the scan
     like multimodal-image-dims. The synthesis Column caches per
-    SparkContext alongside the walk fragments (the _WAV_EXPR_CACHE
+    SparkContext alongside the walk fragments (the WAV fragment
     contract): build+analyze was ~1.4 s/invocation before, ~2x the
     actual execution. Asset bytes land once per (SparkContext, sf_dir)
     via :func:`_asset_corpus`; the IFD walk runs per invocation."""
@@ -2562,17 +2510,15 @@ def multimodal_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AVI_MAX_HOPS = 3  # bounded top-level chunk walk (JUNK/LIST precede hdrl)
 
-# Unresolved-fragment cache, the _WAV_EXPR_CACHE contract.
-_AVI_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def _avi_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _AVI_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _AVI_EXPR_CACHE if k[0] != key[0]]:
-        del _AVI_EXPR_CACHE[k]
+    """The AVI walk Columns, an expression artifact (the WAV contract)."""
+    return artifacts.get_or_build(
+        spark, f"multimodal.avi_exprs.{content}", lambda: _avi_build(content)
+    )
+
+
+def _avi_build(content: str) -> dict:
     c = F.col(content)
     is_avi = (F.hex(c.substr(F.lit(1), F.lit(4))) == "52494646") & (
         F.hex(c.substr(F.lit(9), F.lit(4))) == "41564920"  # "AVI "
@@ -2620,9 +2566,7 @@ def _avi_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _AVI_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 def with_avi_meta(df: DataFrame, content: str = "content") -> DataFrame:
@@ -2701,9 +2645,8 @@ def multimodal_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _avi_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVI corpus synthesis (runs only on an asset-corpus cache miss)."""
     d = load_table(spark, sf_dir, "documents")
-    synth_key = (spark.sparkContext.applicationId, "__avi_synth__")
-    cached = _AVI_EXPR_CACHE.get(synth_key)
-    if cached is None:
+
+    def build() -> dict:
         doc = F.col("doc_id")
         usec = 10000 + (doc % 500) * 100
         frames = 1 + doc % 5000
@@ -2756,8 +2699,9 @@ def _avi_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("41564920"),  # "AVI "
             body,
         )
-        cached = {"payload_hex": payload_hex}
-        _AVI_EXPR_CACHE[synth_key] = cached
+        return {"payload_hex": payload_hex}
+
+    cached = artifacts.get_or_build(spark, "multimodal.avi_synth_exprs", build)
     return d.select(
         F.col("doc_id").alias("asset_id"),
         F.unhex(cached["payload_hex"]).alias("content"),
@@ -2784,8 +2728,6 @@ def _avi_parse(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multimodal-tar-meta — ustar member headers (the WebDataset container)
 # ---------------------------------------------------------------------------
-
-_TAR_EXPR_CACHE: dict[tuple, dict] = {}
 
 
 def _tar_member(c, hdr_off):
@@ -2882,11 +2824,8 @@ def multimodal_tar_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tar_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tar corpus synthesis (runs only on an asset-corpus cache miss)."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__tar_synth__")
-    cached = _TAR_EXPR_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _TAR_EXPR_CACHE if k[0] != key[0]]:
-            del _TAR_EXPR_CACHE[k]
+
+    def build() -> dict:
         doc = F.col("doc_id")
         s1 = 1 + doc % 1400
         s2 = 10 + doc % 200
@@ -2926,8 +2865,9 @@ def _tar_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
             zeros.substr(F.lit(1), pad1_bytes * 2),
             header_hex(name2, s2),
         )
-        cached = {"payload_hex": payload_hex}
-        _TAR_EXPR_CACHE[key] = cached
+        return {"payload_hex": payload_hex}
+
+    cached = artifacts.get_or_build(spark, "multimodal.tar_synth_exprs", build)
     return d.select(
         F.col("doc_id").alias("asset_id"),
         F.unhex(cached["payload_hex"]).alias("content"),
@@ -2945,8 +2885,6 @@ def _tar_parse(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multimodal-zip-meta — ZIP local-file-header metadata, no inflate
 # ---------------------------------------------------------------------------
-
-_ZIP_EXPR_CACHE: dict[tuple, dict] = {}
 
 
 def with_zip_meta(df: DataFrame, content: str = "content") -> DataFrame:
@@ -3023,11 +2961,8 @@ def multimodal_zip_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zip_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZIP corpus synthesis (runs only on an asset-corpus cache miss)."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__zip_synth__")
-    cached = _ZIP_EXPR_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _ZIP_EXPR_CACHE if k[0] != key[0]]:
-            del _ZIP_EXPR_CACHE[k]
+
+    def build() -> dict:
         doc = F.col("doc_id")
         method = F.when(doc % 3 == 0, 0).otherwise(8)
         usize = 100 + doc % 9000
@@ -3056,8 +2991,9 @@ def _zip_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
             hexle2(F.lit(0)),  # extra length
             F.hex(F.encode(fname, "UTF-8")),
         )
-        cached = {"payload_hex": payload_hex}
-        _ZIP_EXPR_CACHE[key] = cached
+        return {"payload_hex": payload_hex}
+
+    cached = artifacts.get_or_build(spark, "multimodal.zip_synth_exprs", build)
     return d.select(
         F.col("doc_id").alias("asset_id"),
         F.unhex(cached["payload_hex"]).alias("content"),
@@ -3072,8 +3008,6 @@ def _zip_parse(assets: DataFrame) -> DataFrame:
 # multimodal-ogg-meta — Ogg BOS page + OpusHead identification header
 # ---------------------------------------------------------------------------
 
-_OGG_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
     """Append (is_ogg, is_bos, serial, channels, pre_skip, sample_rate)
@@ -3087,11 +3021,8 @@ def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
     offset depends on the PARSED n_segs, so a fixed-offset read fails
     any stream whose lacing differs. Non-Ogg / non-Opus payloads parse
     as NULLs, never wrong values."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _OGG_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _OGG_EXPR_CACHE if k[0] != key[0]]:
-            del _OGG_EXPR_CACHE[k]
+
+    def build() -> dict:
         c = F.col(content)
         is_ogg = (F.hex(c.substr(F.lit(1), F.lit(4))) == "4F676753") & (
             _be_uint(c, F.lit(5), 1) == 0
@@ -3135,8 +3066,11 @@ def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
                 )
             )
         )
-        frags = {"init": init, "fields": fields}
-        _OGG_EXPR_CACHE[key] = frags
+        return {"init": init, "fields": fields}
+
+    frags = artifacts.get_or_build(
+        df.sparkSession, f"multimodal.ogg_exprs.{content}", build
+    )
     passthrough = [col for col in df.columns]
     cur = df.select("*", frags["init"].alias("_g"))
     cur = cur.select(*passthrough, frags["fields"].alias("_g"))
@@ -3192,9 +3126,8 @@ def multimodal_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ogg_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ogg corpus synthesis (runs only on an asset-corpus cache miss)."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__ogg_synth__")
-    cached = _OGG_EXPR_CACHE.get(key)
-    if cached is None:
+
+    def build() -> dict:
         doc = F.col("doc_id")
         serial = doc % 2147483647
         channels = 1 + doc % 2
@@ -3240,8 +3173,9 @@ def _ogg_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
             seg_table,
             opus_head,
         )
-        cached = {"payload_hex": payload_hex}
-        _OGG_EXPR_CACHE[key] = cached
+        return {"payload_hex": payload_hex}
+
+    cached = artifacts.get_or_build(spark, "multimodal.ogg_synth_exprs", build)
     return d.select(
         F.col("doc_id").alias("asset_id"),
         F.unhex(cached["payload_hex"]).alias("content"),
@@ -3268,8 +3202,6 @@ def _ogg_parse(assets: DataFrame) -> DataFrame:
 # multimodal-pdf-meta — PDF header/trailer triage, no object parsing
 # ---------------------------------------------------------------------------
 
-_PDF_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
     """Append (is_pdf, version, n_objects, has_eof, startxref_offset)
@@ -3281,11 +3213,8 @@ def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
     between "startxref" and "%%EOF"). Substring counting is the
     (length − length(replace))/len trick — pure string expressions,
     no regex scan per object."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _PDF_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _PDF_EXPR_CACHE if k[0] != key[0]]:
-            del _PDF_EXPR_CACHE[k]
+
+    def build() -> dict:
         c = F.col(content)
         txt = F.decode(c, "UTF-8")
         is_pdf = F.hex(c.substr(F.lit(1), F.lit(5))) == "255044462D"
@@ -3300,7 +3229,7 @@ def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
         sx = F.regexp_extract(
             txt, "startxref[^0-9]*([0-9]+)[^0-9]*%%EOF$", 1
         )
-        frags = {
+        return {
             "fields": [
                 is_pdf.alias("is_pdf"),
                 version.alias("version"),
@@ -3311,7 +3240,10 @@ def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
                 ),
             ]
         }
-        _PDF_EXPR_CACHE[key] = frags
+
+    frags = artifacts.get_or_build(
+        df.sparkSession, f"multimodal.pdf_exprs.{content}", build
+    )
     return df.select("*", *frags["fields"])
 
 
@@ -3347,9 +3279,8 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only, zero shuffle, zero Python — fused into the scan;
     Columns cached per SparkContext."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__pdf_synth__")
-    cached = _PDF_EXPR_CACHE.get(key)
-    if cached is None:
+
+    def build() -> dict:
         doc = F.col("doc_id")
         version = F.concat(F.lit("1."), (4 + doc % 4).cast("string"))
         n_obj = (1 + doc % 30).cast("int")
@@ -3371,8 +3302,9 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             sxoff.cast("string"),
             F.lit("\n%%EOF"),
         )
-        cached = {"payload": F.encode(body, "UTF-8")}
-        _PDF_EXPR_CACHE[key] = cached
+        return {"payload": F.encode(body, "UTF-8")}
+
+    cached = artifacts.get_or_build(spark, "multimodal.pdf_synth_exprs", build)
     src = cached
     assets = _asset_corpus(
         spark,
@@ -3401,8 +3333,6 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multimodal-srt-meta — SubRip subtitle triage (cue count, time span)
 # ---------------------------------------------------------------------------
 
-_SRT_EXPR_CACHE: dict[tuple, dict] = {}
-
 # Backslash-free shared timestamp regex (the G18 literal rule)
 _SRT_TS_RE = "[0-9][0-9]:[0-9][0-9]:[0-9][0-9],[0-9][0-9][0-9]"
 
@@ -3415,11 +3345,8 @@ def with_srt_meta(df: DataFrame, content: str = "content") -> DataFrame:
     The transcript-alignment triage a video/audio pipeline runs before
     pairing subtitles with media (duration mismatch, empty or
     single-cue files)."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _SRT_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _SRT_EXPR_CACHE if k[0] != key[0]]:
-            del _SRT_EXPR_CACHE[k]
+
+    def build() -> dict:
         txt = F.col(content)
         n_cues = (
             (F.length(txt) - F.length(F.replace(txt, F.lit(" --> "))))
@@ -3440,7 +3367,7 @@ def with_srt_meta(df: DataFrame, content: str = "content") -> DataFrame:
         first_ts = F.element_at(all_ts, 1)
         last_ts = F.element_at(all_ts, -1)
         has = n_cues > 0
-        frags = {
+        return {
             "fields": [
                 n_cues.alias("n_cues"),
                 F.when(has, ms(first_ts)).alias("first_start_ms"),
@@ -3448,7 +3375,10 @@ def with_srt_meta(df: DataFrame, content: str = "content") -> DataFrame:
                 F.when(has, ms(last_ts) - ms(first_ts)).alias("span_ms"),
             ]
         }
-        _SRT_EXPR_CACHE[key] = frags
+
+    frags = artifacts.get_or_build(
+        df.sparkSession, f"multimodal.srt_exprs.{content}", build
+    )
     return df.select("*", *frags["fields"])
 
 
@@ -3479,9 +3409,8 @@ def multimodal_srt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-occurrence identity, timestamp decode is fixed-width
     positional arithmetic; Columns cached per SparkContext."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__srt_synth__")
-    cached = _SRT_EXPR_CACHE.get(key)
-    if cached is None:
+
+    def build() -> dict:
         fmt = (
             "lpad(CAST(ms DIV 3600000 AS STRING), 2, '0') || ':'"
             " || lpad(CAST(ms DIV 60000 % 60 AS STRING), 2, '0') || ':'"
@@ -3499,8 +3428,9 @@ def multimodal_srt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             " || chr(10) || 'cue text ' || CAST(i AS STRING)"
             " || chr(10)), chr(10))"
         )
-        cached = {"payload": synth}
-        _SRT_EXPR_CACHE[key] = cached
+        return {"payload": synth}
+
+    cached = artifacts.get_or_build(spark, "multimodal.srt_synth_exprs", build)
     src = cached
     assets = _asset_corpus(
         spark,

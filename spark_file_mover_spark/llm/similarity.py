@@ -38,9 +38,9 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
     load_table,
     plan_cached,
 )
@@ -285,23 +285,31 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed within the same invocation). The production posture for
     a durable index is still a bucketed TABLE written at ingest —
     partition-pruned, survives the app itself."""
+    index = artifacts.get_or_build(
+        spark,
+        "similarity.ivf_index",
+        lambda: _ivf_index(spark, sf_dir),
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
+    if index is None:
+        # a corpus whose seed range holds no usable vector has no cells
+        # to probe — typed empty result (mirrors the oracle, whose every
+        # CTE is empty over an empty filtered base)
+        return spark.createDataFrame(
+            [], "query_id bigint, neighbor_id bigint, label int, "
+            "rnk int, cosine double"
+        )
+    return _ivf_query(*index)
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple | None:
+    """The persisted IVF index: the vec→cell relation plus its centroid
+    table (both pure functions of the input files), or None when the
+    seed range holds no usable vector."""
     import math
 
-    from pyspark.sql import Window as W
     from pyspark.sql.functions import pandas_udf
-
-    global _last_ivf_index
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if _last_ivf_index is not None and _last_ivf_index[0] == cache_key:
-        _key, assigned, cent = _last_ivf_index
-        return _ivf_query(assigned, cent)
-    if _last_ivf_index is not None:
-        for rel in _last_ivf_index[1:]:
-            try:
-                rel.unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-        _last_ivf_index = None
 
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "en", norm(F.col("embedding"))
@@ -324,13 +332,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r.vec_id,
     )
     if not seed_rows:
-        # a corpus whose seed range holds no usable vector has no cells
-        # to probe — typed empty result (mirrors the oracle, whose every
-        # CTE is empty over an empty filtered base)
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, label int, "
-            "rnk int, cosine double"
-        )
+        return None
 
     def _py_norm(vec) -> float:
         acc = 0.0
@@ -383,20 +385,13 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent.count()  # centroids ARE index metadata (k × dim, tiny): paying
     # the full-corpus collect_list fold per PROBE was the r14 bench
     # regression's main share — build it once with the assignment
-    _last_ivf_index = (cache_key, assigned, cent)
-    return _ivf_query(assigned, cent)
-
-
-# ((appId, sf_dir), assigned, cent) — the live persisted IVF index: the
-# vec→cell relation plus its centroid table (both pure functions of the
-# input files); reused while the key matches, dropped/rebuilt on change
-_last_ivf_index = None
+    return assigned, cent
 
 
 def _ivf_centroids(assigned: DataFrame) -> DataFrame:
     """Centroid table of the IVF index: per-cell element-wise mean.
     Pure function of ``assigned`` — built once per index, cached in
-    ``_last_ivf_index`` beside it (a real IVF index stores exactly this
+    the index artifact beside it (a real IVF index stores exactly this
     k × dim table; recomputing it per probe re-scanned the corpus)."""
     # element-wise mean per cell via a SEQUENTIAL vec_id-ordered fold —
     # not F.sum over doubles: partial-aggregation order is partition-
@@ -537,7 +532,6 @@ def _lsh_sig_sql(bits: int) -> str:
         f"THEN {1 << i} ELSE 0 END)"
         for i, (a, b) in enumerate(_LSH_PAIRS[:bits])
     )
-
 
 
 # Block key: label × 4 LSH sign bits (the seeded _LSH_PAIRS prefix) —

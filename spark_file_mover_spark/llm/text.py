@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm._textnorm import toks
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import load_table, plan_cached
 from spark_file_mover_spark.numerics import snap
@@ -931,67 +932,55 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact integers; novelty is one snapped division; gram-less docs
     (< 3 tokens) surface with zero counts and NULL novelty."""
-    global _last_nov_grams
     from spark_file_mover_spark import checkpoints
-    from spark_file_mover_spark.sources.io import artifact_cache_key
 
-    # ADVICE r15: cache bypassed in BOTH directions under the plan-only
-    # tooling mode — no corpus tokenize jobs from dump tooling (the r11
-    # zero-jobs invariant), no tooling-shaped entry leaking into
-    # production hits; dumps render the cold shape.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    if (
-        not lazy
-        and _last_nov_grams is not None
-        and _last_nov_grams[0] == cache_key
-    ):
-        return _novelty_query(d, _last_nov_grams[1])
-    if _last_nov_grams is not None and not lazy:
-        try:  # ADVICE r15: release the stale blocks (the _tf_cache
-            _last_nov_grams[1].unpersist()  # eviction pattern)
-        except Exception:
-            pass  # previous relation may belong to a stopped session
-        _last_nov_grams = None
-    tk = d.select("doc_id", toks().alias("tk"))
-    grams = (
-        tk.select(
-            "doc_id",
-            F.explode(
-                # sequence(0, -1) would generate [0, -1] (Spark infers a
-                # negative step), so gram-less docs get an explicit
-                # empty array — explode drops them, the left join
-                # restores them with zero counts
-                F.when(
-                    F.size("tk") >= _NOV_N,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("tk") - _NOV_N),
-                        lambda i: F.xxhash64(
-                            F.concat_ws(
-                                " ", F.slice(F.col("tk"), i + 1, _NOV_N)
-                            )
+
+    def build() -> DataFrame:
+        tk = d.select("doc_id", toks().alias("tk"))
+        grams = (
+            tk.select(
+                "doc_id",
+                F.explode(
+                    # sequence(0, -1) would generate [0, -1] (Spark infers a
+                    # negative step), so gram-less docs get an explicit
+                    # empty array — explode drops them, the left join
+                    # restores them with zero counts
+                    F.when(
+                        F.size("tk") >= _NOV_N,
+                        F.transform(
+                            F.sequence(F.lit(0), F.size("tk") - _NOV_N),
+                            lambda i: F.xxhash64(
+                                F.concat_ws(
+                                    " ", F.slice(F.col("tk"), i + 1, _NOV_N)
+                                )
+                            ),
                         ),
-                    ),
-                ).otherwise(F.array().cast("array<bigint>"))
-            ).alias("gh"),
+                    ).otherwise(F.array().cast("array<bigint>"))
+                ).alias("gh"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    if not lazy:
+        # ADVICE r15: no corpus tokenize jobs under the plan-only tooling
+        # mode (the r11 zero-jobs invariant; the store is bypassed there)
+        if checkpoints.LAZY_ACTIVE:
+            return grams
         # two consumers (first-seen agg + attribution join) plus the
         # cross-invocation cache; persist keeps replayable lineage so
         # executor loss between invocations recomputes instead of
         # failing later hits (the containment-er note)
         grams = grams.persist()
         grams.count()  # eager: pay the ingest scan once
-        _last_nov_grams = (cache_key, grams)
+        return grams
+
+    grams = artifacts.get_or_build(
+        spark,
+        "text.novelty_grams",
+        build,
+        sf_dir=sf_dir,
+        release=artifacts.unpersist,
+    )
     return _novelty_query(d, grams)
-
-
-# ((appId, corpus fingerprint), grams) — the live persisted distinct
-# (doc_id, gram-hash) relation (the _last_cont_er contract)
-_last_nov_grams = None
 
 
 def _novelty_query(d: DataFrame, grams: DataFrame) -> DataFrame:
@@ -1292,11 +1281,6 @@ ORDER BY s.doc_id
 """
 
 
-# ((appId, corpus fingerprint), line relation) — the live persisted
-# hashed line-block relation (the _last_nov_grams contract)
-_last_bp_lines = None
-
-
 @query("text-boilerplate-lines", oracle=_BP_ORACLE)
 @plan_cached("text-boilerplate-lines")
 def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1333,25 +1317,12 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists per (SparkContext, corpus) like the novelty grams (one
     live entry, replayable lineage). The df pass, threshold and
     per-doc rollup — the boilerplate operator — run per invocation."""
-    global _last_bp_lines
-    from spark_file_mover_spark import checkpoints
-    from spark_file_mover_spark.sources.io import artifact_cache_key
-
-    # ADVICE r15: read side bypassed under the plan-only tooling mode
-    # too (the write side already was) so dumps render the cold shape
-    # instead of a live entry's materialized leaf.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    if (
-        not lazy
-        and _last_bp_lines is not None
-        and _last_bp_lines[0] == cache_key
-    ):
-        l = _last_bp_lines[1]
-    else:
-        if not lazy:
-            _last_bp_lines = None
+
+    # localCheckpoint, not persist: both consumers read the raw
+    # materialized rows; the columnar persist() cache measured ~2x
+    # slower per read (decompression per consumer).
+    def build() -> DataFrame:
         sized = d.select(
             "doc_id", "source", toks().alias("toks")
         ).selectExpr(
@@ -1361,7 +1332,7 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"greatest(CAST((size(toks) + {_BP_LINE - 1})"
             f" DIV {_BP_LINE} AS INT), 1) AS n_lines",
         )
-        l = sized.selectExpr(
+        return sized.selectExpr(
             "doc_id",
             "source",
             "n_lines",
@@ -1375,15 +1346,10 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"xxhash64(array_join(slice(toks, idx * {_BP_LINE} + 1,"
             f" {_BP_LINE}), ' ')) AS lh",
         ).localCheckpoint(eager=True)
-        # localCheckpoint, not persist: both consumers read the raw
-        # materialized rows; the columnar persist() cache measured
-        # ~2x slower per read (decompression per consumer). Never
-        # cached under the plan-only tooling mode — the substituted
-        # barrier is an empty leaf (the cached_plan bypass rule).
-        from spark_file_mover_spark import checkpoints
 
-        if not checkpoints.LAZY_ACTIVE:
-            _last_bp_lines = (cache_key, l)
+    l = artifacts.get_or_build(
+        spark, "text.boilerplate_lines", build, sf_dir=sf_dir
+    )
     nd = d.groupBy("source").agg(F.count("*").alias("n_docs"))
     df_rel = l.groupBy("source", "lh").agg(
         F.countDistinct("doc_id").alias("df")

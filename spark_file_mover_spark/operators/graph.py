@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table, plan_cached
 from spark_file_mover_spark.numerics import snap
 
 
@@ -54,34 +55,23 @@ _PR_ENTITY_BASE = 10**6  # offsets entity ids out of the user-id space
 # (1 - d) * S0 = 15 * S0 / 100 — integer, exact in both engines
 _PR_TELE = 15 * _PR_SCALE // 100
 
-# Materialized-view cache for the STATIC graph relations (edges, the
-# node+outdeg relation, the node count), keyed on (applicationId,
-# sf_dir). The graph is a pure function of immutable input files, so
-# rebuilding it on every invocation is waste an engine would not pay —
-# a production deployment maintains exactly this as a materialized
-# view the iterative query reads. Stale-appId entries are evicted on
-# first use after a SparkContext restart (the _PHASH_EXPR_CACHE
-# contract, data-relation flavored).
-_PR_GRAPH_CACHE: dict = {}
+# The STATIC graph relations (edges, the node+outdeg relation, the
+# node count) are artifacts: the graph is a pure function of immutable
+# input files, so rebuilding it on every invocation is waste an engine
+# would not pay — a production deployment maintains exactly this as a
+# materialized view the iterative query reads. Superseded checkpointed
+# relations release via the ContextCleaner once dereferenced.
 
 
 def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cached DIRECTED user→entity click-edge relation K1
     (pagerank) and K9 (reciprocity) share: forward edges for every
     interaction, back-edges only for even entities — checkpointed once
-    per (SparkContext, sf_dir) under the ``_PR_GRAPH_CACHE``
-    materialized-view contract, so every query over the graph reads
+    per (SparkContext, corpus), so every query over the graph reads
     the materialized (src, dst) pairs instead of re-running the JSON
     parse + two DISTINCTs against the corpus."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE.get(cache_key)
-    if cached is None:
-        # one live entry — stale checkpointed graph relations release
-        # via the ContextCleaner once dereferenced
-        _PR_GRAPH_CACHE.clear()
-        cached = {}
-        _PR_GRAPH_CACHE[cache_key] = cached
-    if "e" not in cached:
+
+    def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         ent = F.lit(_PR_ENTITY_BASE) + F.get_json_object(
             "props", "$.k"
@@ -102,8 +92,34 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(ent.alias("src"), F.col("user_id").alias("dst"))
             .distinct()
         )
-        cached["e"] = _reliable_checkpoint(fwd.unionAll(back))
-    return cached["e"]
+        return _reliable_checkpoint(fwd.unionAll(back))
+
+    return artifacts.get_or_build(spark, "graph.pr_edges", build, sf_dir=sf_dir)
+
+
+def _pr_nodes(spark: SparkSession, sf_dir: str) -> tuple:
+    """(nd, n_nodes): one checkpointed (node, outdeg) relation over the
+    K1 edges — NULL outdeg = dangling — and its exact row count.
+    Folding the degree into the node relation (and, in the loops, into
+    the rank relation) deletes the per-round deg join AND the per-round
+    anti-join the first formulation paid."""
+
+    def build() -> tuple:
+        e = _pr_edges(spark, sf_dir)
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+        nd = _reliable_checkpoint(
+            nodes.join(deg, nodes.node == deg.src, "left").select(
+                "node", "outdeg"
+            )
+        )
+        return nd, nd.count()  # one scalar — metadata-scale
+
+    return artifacts.get_or_build(spark, "graph.pr_nodes", build, sf_dir=sf_dir)
 
 
 def _pr_oracle() -> str:
@@ -194,27 +210,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ranks only (the rank relation is 24 B/row; edges never move
     after round 0).
     """
-    cache_key = artifact_cache_key(spark, sf_dir)
     e = _pr_edges(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE[cache_key]
-    if "nd" not in cached:
-        # one relation for (node, outdeg): NULL outdeg = dangling —
-        # folding the degree into the node relation (and below, into
-        # the rank relation) deletes the per-round deg join AND the
-        # per-round anti-join the first formulation paid
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        cached["nd"] = _reliable_checkpoint(
-            nodes.join(deg, nodes.node == deg.src, "left").select(
-                "node", "outdeg"
-            )
-        )
-        cached["n"] = cached["nd"].count()  # one scalar — metadata-scale
-    nd, n_nodes = cached["nd"], cached["n"]
+    nd, n_nodes = _pr_nodes(spark, sf_dir)
 
     # ranks carries (node, outdeg, rank): every round is ONE
     # materialization job — the e⋈ranks contribution aggregate, the
@@ -280,21 +277,14 @@ _LPA_ENTITY_BASE = _PR_ENTITY_BASE  # same node-id space as pagerank
 # (event_id is a stable key), mirrored in the oracle.
 _LPA_EDGE_MOD = 20
 
-_LPA_CACHE: dict = {}
-_LPA_N_CACHE: dict = {}  # exact adjacency edge count per cached artifact
-
 
 def _sparse_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cached UNDIRECTED sparse user↔entity adjacency K3 and K4
     share (every ``_LPA_EDGE_MOD``-th event, both edge directions) —
-    one localCheckpoint per (SparkContext, sf_dir), the
-    ``_PR_GRAPH_CACHE`` materialized-view contract."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _LPA_CACHE.get(cache_key)
-    if cached is None:
-        # one live entry — see _KM_CACHE (stale checkpointed adjacency
-        # releases via the ContextCleaner once dereferenced)
-        _LPA_CACHE.clear()
+    one checkpoint per (SparkContext, corpus), the graph-artifact
+    contract."""
+
+    def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         ent = F.lit(_LPA_ENTITY_BASE) + F.get_json_object(
             "props", "$.k"
@@ -304,32 +294,33 @@ def _sparse_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("user_id").alias("a"), ent.alias("b"))
             .distinct()
         )
-        adj = _reliable_checkpoint(
+        return _reliable_checkpoint(
             fwd.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionAll(
                 fwd.select(F.col("b").alias("src"), F.col("a").alias("dst"))
             )
         )
-        _LPA_CACHE[cache_key] = adj
-        cached = adj
-    return cached
+
+    return artifacts.get_or_build(
+        spark, "graph.lpa_adjacency", build, sf_dir=sf_dir
+    )
 
 
 def _lpa_node_fits(spark: SparkSession, sf_dir: str) -> bool:
     """True when every node-bounded per-round relation of the K3/K5
     Pregel loops fits the session broadcast threshold — gated on the
     EXACT adjacency edge count (taken once per cached artifact, the
-    K1 ``cached['n']`` discipline; distinct nodes ≤ edge rows because
+    K1 node-count discipline; distinct nodes ≤ edge rows because
     the undirected relation lists each node as a src) times the
     _PR_RANK_BCAST_BYTES hashed-row estimate. Past the threshold the
     loops keep their shuffled joins — the _tri_corners
     fits-or-shuffle contract."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    n = _LPA_N_CACHE.get(cache_key)
-    if n is None:
-        _LPA_N_CACHE.clear()
-        n = _sparse_adjacency(spark, sf_dir).count()
-        _LPA_N_CACHE[cache_key] = n
+    n = artifacts.get_or_build(
+        spark,
+        "graph.lpa_n_edges",
+        lambda: _sparse_adjacency(spark, sf_dir).count(),
+        sf_dir=sf_dir,
+    )
     return 0 < n * _PR_RANK_BCAST_BYTES <= _bcast_threshold(spark)
 
 
@@ -400,7 +391,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation so the two derivations stay independent.
 
     Plan shape: adjacency localCheckpoints once (cached per
-    (SparkContext, sf_dir) — the _PR_GRAPH_CACHE contract); each round
+    (SparkContext, sf_dir) — the graph-artifact contract); each round
     is ONE join shuffle (adj ⋈ labels on dst) + two map-side-combined
     aggregates, labels localCheckpoint per round to truncate lineage.
     At cluster scale adjacency pre-partitions on dst so each round
@@ -574,19 +565,14 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_MAX_ENT_USERS = 64
 
 
-_TRI_CACHE: dict = {}
-
-
 def _tri_relations(spark: SparkSession, sf_dir: str):
     """The cached (oriented edges, degrees) pair for K5 — one
     localCheckpoint each per (SparkContext, corpus fingerprint). The
     triangle enumeration joins ``eo`` against itself THREE times;
     without the checkpoint Spark re-derives the events-scan →
     hot-entity guard → pair-join projection once per join input."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _TRI_CACHE.get(cache_key)
-    if cached is None:
-        _TRI_CACHE.clear()  # one live entry (the _KM_CACHE contract)
+
+    def build() -> tuple:
         ev = load_table(spark, sf_dir, "events")
         ent = F.get_json_object("props", "$.k").cast("long")
         fwd = (
@@ -641,10 +627,11 @@ def _tri_relations(spark: SparkSession, sf_dir: str):
         # enumeration below gates its join strategy on it — Catalyst
         # cannot (LogicalRDD carries no size stats, so the planner
         # would never broadcast the checkpointed edges on its own).
-        n_edges = eo.count()
-        cached = (eo, deg, n_edges)
-        _TRI_CACHE[cache_key] = cached
-    return cached
+        return eo, deg, eo.count()
+
+    return artifacts.get_or_build(
+        spark, "graph.tri_relations", build, sf_dir=sf_dir
+    )
 
 
 # Planner-parity estimate of a broadcast hash relation's in-memory
@@ -807,7 +794,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped to 9 dp (NULL for degree < 2).
 
     The oriented-edge and degree relations are cached per
-    (SparkContext, corpus fingerprint) — the ``_PR_GRAPH_CACHE``
+    (SparkContext, corpus fingerprint) — the graph-artifact
     materialized-view contract: the projection is a pure function of
     immutable input files, and ``eo`` feeds THREE join inputs (a
     naive composition re-derives the whole events→projection DAG for
@@ -893,18 +880,13 @@ ORDER BY user_id, rnk
 """
 
 
-_JN_CACHE: dict = {}
-
-
 def _jn_relations(spark: SparkSession, sf_dir: str):
     """The cached (guarded bipartite edges, user degrees) pair for K6 —
     one localCheckpoint each per (SparkContext, corpus fingerprint),
-    the ``_TRI_CACHE`` contract (a pure function of the immutable
+    the K5 tri-relations contract (a pure function of the immutable
     input files, consumed by three join inputs per invocation)."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _JN_CACHE.get(cache_key)
-    if cached is None:
-        _JN_CACHE.clear()  # one live entry (the _KM_CACHE contract)
+
+    def build() -> tuple:
         ev = load_table(spark, sf_dir, "events")
         ent = F.get_json_object("props", "$.k").cast("long")
         fwd = (
@@ -921,9 +903,11 @@ def _jn_relations(spark: SparkSession, sf_dir: str):
         deg = _reliable_checkpoint(
             fk.groupBy("u").agg(F.count("*").alias("d"))
         )
-        cached = (fk, deg)
-        _JN_CACHE[cache_key] = cached
-    return cached
+        return fk, deg
+
+    return artifacts.get_or_build(
+        spark, "graph.jn_relations", build, sf_dir=sf_dir
+    )
 
 
 @query("graph-jaccard-neighbors", oracle=_jn_oracle())
@@ -947,7 +931,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully deterministic.
 
     The guarded bipartite edge relation and the degree relation are
-    cached per (SparkContext, corpus fingerprint) — the _TRI_CACHE
+    cached per (SparkContext, corpus fingerprint) — the K5 tri-relations
     contract: fk feeds BOTH pair-join inputs and the degree rollup,
     and unmaterialized each consumer re-derived the events scan →
     distinct → guard chain (8 corpus scans per invocation in the
@@ -1073,7 +1057,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel-on-DataFrames family member #5 (K1 sum, K3 mode, K4
     frontier-min, components min-closure; k-core = filter-by-degree):
     same loop skeleton, each round = TWO semi-joins restricting the
-    shared cached adjacency (_sparse_adjacency, the _PR_GRAPH_CACHE
+    shared cached adjacency (_sparse_adjacency, the graph-artifact
     contract) to surviving endpoints + ONE map-side-combined degree
     aggregate; the surviving-node relation localCheckpoints per round
     (8 B/row — at cluster scale adjacency pre-partitions on src and
@@ -1768,7 +1752,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     likelihood) — recommender candidate generation uses both.
 
     Shape at 100 TB: rides the SAME cached (fk, deg) checkpoints as
-    K6 (_JN_CACHE — zero corpus passes here), with the hot-entity cap
+    K6 (the K6 artifact — zero corpus passes here), with the hot-entity cap
     applied BEFORE the wedge join (C(u,2) blowup bound); the entity-
     degree relation derives from the cached fk and joins on the wedge
     key k, so it shares the pair join's exchange; WindowGroupLimit
@@ -2058,36 +2042,24 @@ def graph_personalized_pagerank(
     driver hash-compares exact ranks after 4 rounds.
 
     Plan shape: shares K1's cached edge + (node, outdeg) relations
-    (the _PR_GRAPH_CACHE materialized view); each round is one
+    (the graph-artifact materialized view); each round is one
     contribution aggregate over the rank>0 frontier (PPR's frontier
     is SPARSE early — round 1 touches only seed out-edges), a
     completion join, and the one-row dangling aggregate broadcast
     back; ranks localCheckpoint per round. At cluster scale the
     frontier sparsity is the point: per-seed-set PPR touches the
     seeds' neighborhood, not the graph."""
-    cache_key = artifact_cache_key(spark, sf_dir)
     e = _pr_edges(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE[cache_key]
-    if "nd" not in cached:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        cached["nd"] = _reliable_checkpoint(
-            nodes.join(deg, nodes.node == deg.src, "left").select(
-                "node", "outdeg"
-            )
-        )
-        cached["n"] = cached["nd"].count()
-    nd, n_nodes = cached["nd"], cached["n"]
+    nd, n_nodes = _pr_nodes(spark, sf_dir)
     seed_pred = (
         f"node < {_PR_ENTITY_BASE} AND node % {_PPR_SEED_MOD} = 0"
     )
-    if "n_seeds" not in cached:
-        cached["n_seeds"] = nd.filter(seed_pred).count()
-    n_seeds = cached["n_seeds"]
+    n_seeds = artifacts.get_or_build(
+        spark,
+        "graph.ppr_n_seeds",
+        lambda: nd.filter(seed_pred).count(),
+        sf_dir=sf_dir,
+    )
     r0_expr = (
         f"CASE WHEN {seed_pred}"
         f" THEN CAST({n_nodes} AS BIGINT) * {_PR_SCALE} DIV {n_seeds}"

@@ -20,10 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.llm._textnorm import MD5_PREFIX60_SQL
 from spark_file_mover_spark.operators._parity import dec
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table
+from spark_file_mover_spark.sources.io import load_table
 from spark_file_mover_spark.numerics import snap
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -708,7 +709,7 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Source-slice staging (r8, the ingest-artifact contract): the two
     slice files are pure functions of the input — they are WRITTEN
-    once per (appId, sf_dir) into a staging dir and OS-copied into
+    once per (appId, corpus) into a temp-dir artifact and OS-copied into
     each invocation's fresh source dir (two Spark write jobs leave the
     hot path; the checkpoint/sink/restart machinery, the thing under
     proof, is rebuilt fresh every invocation)."""
@@ -716,7 +717,6 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    global _last_eos_src
     base = tempfile.mkdtemp(prefix="sfm-h10-")
     src_dir, sink_dir, ckpt = (
         base + "/src",
@@ -725,10 +725,8 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = load_table(spark, sf_dir, "events")
     schema = e.schema
-    src_key = artifact_cache_key(spark, sf_dir)
-    if _last_eos_src is None or _last_eos_src[0] != src_key:
-        if _last_eos_src is not None:
-            shutil.rmtree(_last_eos_src[1], ignore_errors=True)
+
+    def write_slices() -> str:
         stage = tempfile.mkdtemp(prefix="sfm-h10-stage-")
         e.filter(F.col("event_id") % 40 == 0).coalesce(1).write.mode(
             "overwrite"
@@ -736,8 +734,11 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_id") % 40 == 20).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage + "/p3")
-        _last_eos_src = (src_key, stage)
-    stage = _last_eos_src[1]
+        return stage
+
+    stage = artifacts.get_or_build_dir(
+        spark, "streaming.eos_source_slices", write_slices, sf_dir=sf_dir
+    )
     shutil.copytree(stage + "/p1", src_dir)
 
     def land_delta() -> None:
@@ -782,22 +783,6 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         sorted(counts.items()), "phase string, n_in_sink long"
     ).orderBy("phase")
-
-
-# ((appId, sf_dir), staging dir) — the pre-written source-slice files.
-# Replacing an entry removes the old dir inline; the LIVE entry is
-# removed by the atexit hook below, so repeated bench/test runs don't
-# accumulate staging data in the system tmp dir.
-_last_eos_src = None
-
-
-def _cleanup_eos_staging() -> None:
-    global _last_eos_src
-    if _last_eos_src is not None:
-        import shutil
-
-        shutil.rmtree(_last_eos_src[1], ignore_errors=True)
-        _last_eos_src = None
 
 
 # ---------------------------------------------------------------------------
@@ -979,8 +964,3 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("window_start", "rnk")
     )
-
-
-import atexit  # noqa: E402  (module-scope registration, one per process)
-
-atexit.register(_cleanup_eos_staging)

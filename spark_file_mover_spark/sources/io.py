@@ -14,6 +14,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_file_mover_spark import artifacts
+
 TABLES = (
     "region",
     "nation",
@@ -80,37 +82,24 @@ def artifact_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
     )
 
 
-# (artifact_cache_key, query name) → built (lazy) DataFrame. PLAN cache
-# for pure-read queries, not a result cache: the returned DataFrame
-# re-executes on every action — only the Column-tree construction
-# (dozens-to-hundreds of py4j round trips) and the eager analysis are
-# paid once per (SparkContext, corpus). Profiled at 0.2-0.8 s per
-# invocation on expression-heavy keys (guide §7.3: planning time itself
-# as the bottleneck; the prepared-statement discipline). ONLY valid for
-# query functions with no per-invocation side effects (no writes, no
-# fresh temp dirs, no streaming queries). One live entry per name; the
-# corpus fingerprint in the key invalidates on in-place rewrites.
-_QUERY_PLAN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_plan(spark: SparkSession, sf_dir: str, name: str, make):
-    """Return the cached built plan for ``name`` or build it via the
-    zero-arg ``make`` and cache it (the multimodal _ASSET_PLAN_CACHE
-    discipline, shared). Under the plan-only tooling mode
-    (:data:`checkpoints.LAZY_ACTIVE`) the cache is bypassed in BOTH
-    directions — a plan built against substituted empty-leaf barriers
-    must not leak into production-mode invocations, nor vice versa."""
-    from spark_file_mover_spark import checkpoints
+    """Return the built (lazy) plan for ``name`` from the artifact store,
+    building it via the zero-arg ``make`` on a (SparkContext, corpus)
+    miss. A PLAN cache for pure-read queries, not a result cache: the
+    returned DataFrame re-executes on every action — only the
+    Column-tree construction (dozens-to-hundreds of py4j round trips)
+    and the eager analysis are paid once. ONLY valid for query
+    functions with no per-invocation side effects (no writes, no fresh
+    temp dirs, no streaming queries). The store bypasses itself under
+    the plan-only tooling mode (:data:`checkpoints.LAZY_ACTIVE`)."""
+    built = []
 
-    if checkpoints.LAZY_ACTIVE:
-        return make()
-    key = (artifact_cache_key(spark, sf_dir), name)
-    df = _QUERY_PLAN_CACHE.get(key)
-    if df is None:
-        for k in [k for k in _QUERY_PLAN_CACHE if k[1] == name and k != key]:
-            del _QUERY_PLAN_CACHE[k]
-        df = make()
-        _QUERY_PLAN_CACHE[key] = df
+    def build():
+        built.append(make())
+        return built[0]
+
+    df = artifacts.get_or_build(spark, name, build, sf_dir=sf_dir)
+    if built:
         return df
     # HIT: hand back a fresh no-op projection over the cached logical
     # plan, not the stored Dataset itself — a Dataset that has already

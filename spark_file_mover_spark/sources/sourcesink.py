@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_file_mover_spark import artifacts
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import TABLES, load_table
 from spark_file_mover_spark.numerics import snap
@@ -524,10 +525,6 @@ def repartition_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At test SF the byte-based target collapses to 1 file (bytes < 128 MB
 # floor); the fragmented side is exactly the 16 shards written. Both
 # n_files values and the invariant row counts are data-determined.
-# B7 cached fragmented layout, keyed (applicationId, sf_dir) — one
-# live entry, stale staging dir rmtree-evicted (the B15 lifecycle).
-_last_compact_frag: tuple | None = None
-
 _COMPACT_ORACLE = """
 SELECT 'compacted' AS layout, CAST(1 AS BIGINT) AS n_files,
        COUNT(*) AS n_rows FROM orders
@@ -558,30 +555,22 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     r15: the FRAGMENTED layout is synthetic setup — a pure function of
     the immutable orders input standing in for the small-file mess a
     streaming sink leaves behind — so it is written once per
-    (SparkContext, sf_dir) and reused (the B15/sim-search-ivf
-    materialized-artifact lifecycle; stale key rmtree-evicts). The
-    operator under test — scan the fragmented table, size it, rewrite
-    compacted — runs on EVERY invocation into a fresh directory.
+    (SparkContext, corpus) and reused (a temp-dir artifact; a stale
+    key or a reaped directory rebuilds it). The operator under test —
+    scan the fragmented table, size it, rewrite compacted — runs on
+    EVERY invocation into a fresh directory.
     """
     import os
 
-    global _last_compact_frag
-    frag_key = (spark.sparkContext.applicationId, sf_dir)
-    if _last_compact_frag is not None and _last_compact_frag[0] == frag_key:
-        frag_path = _last_compact_frag[1]
-    else:
-        if _last_compact_frag is not None:
-            import shutil
-
-            shutil.rmtree(
-                os.path.dirname(_last_compact_frag[1]), ignore_errors=True
-            )
-            _last_compact_frag = None
-        stage = tempfile.mkdtemp(prefix="sfm-b7-frag-")
-        frag_path = stage + "/fragmented"
+    def write_fragmented() -> str:
+        path = tempfile.mkdtemp(prefix="sfm-b7-frag-")
         o = load_table(spark, sf_dir, "orders")
-        o.repartition(16).write.mode("overwrite").parquet(frag_path)
-        _last_compact_frag = (frag_key, frag_path)
+        o.repartition(16).write.mode("overwrite").parquet(path)
+        return path
+
+    frag_path = artifacts.get_or_build_dir(
+        spark, "sourcesink.compact_fragmented", write_fragmented, sf_dir=sf_dir
+    )
     base = tempfile.mkdtemp(prefix="sfm-b7-")
 
     frag = spark.read.parquet(frag_path)
@@ -984,11 +973,6 @@ def sink_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DPP_YEARS = (1996, 1997)  # the dim-side era filter; 2 of 7 fact years
 
-# B15 materialized fact/dim layout, keyed (applicationId, sf_dir) —
-# one live entry, stale directory rmtree-evicted (the sim-search-ivf
-# single-live-artifact lifecycle).
-_last_dpp_tables: tuple | None = None
-
 _DPP_ORACLE = f"""
 SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS oyear,
        'mid90s' AS era,
@@ -1023,23 +1007,15 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction is UTC-pinned in both engines.
 
     r15: the partitioned fact + dim layout is a pure function of the
-    immutable orders input — a corpus-ingest MATERIALIZED VIEW, the
-    _PR_GRAPH_CACHE / sim-search-ivf contract — so it is written once
-    per (SparkContext, sf_dir) and reused across invocations (a stale
-    key rmtree-evicts its directory; driver-fresh single runs still
-    pay the build, pinned cold in tests). The DPP behavior the key
-    declares — runtime partition pruning at split generation — runs
-    on EVERY invocation against the on-disk layout."""
-    global _last_dpp_tables
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if _last_dpp_tables is not None and _last_dpp_tables[0] == cache_key:
-        base = _last_dpp_tables[1]
-    else:
-        if _last_dpp_tables is not None:
-            import shutil
+    immutable orders input — a corpus-ingest MATERIALIZED VIEW in a
+    temp-dir artifact — so it is written once per (SparkContext,
+    corpus) and reused across invocations (a stale key or a reaped
+    directory rebuilds it; driver-fresh single runs still pay the
+    build, pinned cold in tests). The DPP behavior the key declares —
+    runtime partition pruning at split generation — runs on EVERY
+    invocation against the on-disk layout."""
 
-            shutil.rmtree(_last_dpp_tables[1], ignore_errors=True)
-            _last_dpp_tables = None
+    def write_tables() -> str:
         base = tempfile.mkdtemp(prefix="sfm-b15-")
         o = load_table(spark, sf_dir, "orders")
         (
@@ -1060,7 +1036,11 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(base + "/year_dim")
         )
-        _last_dpp_tables = (cache_key, base)
+        return base
+
+    base = artifacts.get_or_build_dir(
+        spark, "sourcesink.dpp_tables", write_tables, sf_dir=sf_dir
+    )
     fact_path = base + "/orders_by_year"
     dim_path = base + "/year_dim"
     fact = spark.read.parquet(fact_path)
@@ -1558,11 +1538,6 @@ ORDER BY s.snapshot
 """
 
 
-# ((appId, sf_dir), template dir) — the live read-only per-bucket file
-# template the expiry scratch dirs hardlink from (the B15 lifecycle)
-_last_b22_template: tuple | None = None
-
-
 @query("sink-expire-snapshots", oracle=_EXPIRE_ORACLE)
 def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B22: snapshot expiry + orphan-file vacuum — the table-lifecycle
@@ -1623,18 +1598,7 @@ def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the fresh copy; a vacuum unlink removes the run's link,
     # never the template inode. The template dir's mtime is bumped per
     # use so the 1 h sweep can't reap a live session's template.
-    global _last_b22_template
-    tmpl_key = (spark.sparkContext.applicationId, sf_dir)
-    if (
-        _last_b22_template is not None
-        and _last_b22_template[0] == tmpl_key
-        and os.path.isdir(_last_b22_template[1])
-    ):
-        tmpl = _last_b22_template[1]
-    else:
-        if _last_b22_template is not None:
-            shutil.rmtree(_last_b22_template[1], ignore_errors=True)
-            _last_b22_template = None
+    def write_template() -> str:
         tmpl = tempfile.mkdtemp(prefix="sfm-b22tmpl-")
         o = load_table(spark, sf_dir, "orders")
         # ONE partitioned write job instead of four sequential
@@ -1670,7 +1634,11 @@ def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
                     1
                 ).write.mode("overwrite").parquet(path)
         shutil.rmtree(staged, ignore_errors=True)
-        _last_b22_template = (tmpl_key, tmpl)
+        return tmpl
+
+    tmpl = artifacts.get_or_build_dir(
+        spark, "sourcesink.expire_template", write_template, sf_dir=sf_dir
+    )
     os.utime(tmpl)
 
     base = tempfile.mkdtemp(prefix="sfm-b22-")

@@ -331,18 +331,12 @@ def test_minhash_guard_window_runs_once_inside_cache(spark, sf_dir):
     windowspec count without any extra execution)."""
     import re
 
-    from spark_file_mover_spark.llm import dedup as _dedup
-    from spark_file_mover_spark.sources import io as _io
+    from spark_file_mover_spark import artifacts
 
-    if _dedup._last_bands is not None:
-        _dedup._last_bands[1].unpersist()
-        _dedup._last_bands = None
+    artifacts.evict("dedup.bands")
     # the r15 built-plan cache must be evicted WITH the relation it
     # references, or the stale plan would render the unpersisted shape
-    for k in [
-        k for k in _io._QUERY_PLAN_CACHE if k[1] == "dedup-near-minhash"
-    ]:
-        del _io._QUERY_PLAN_CACHE[k]
+    artifacts.evict("dedup-near-minhash")
     df = registry.QUERIES["dedup-near-minhash"](spark, sf_dir)
     plan = _formatted_plan(spark, df)
     # the guard window appears exactly once (in the cached plan)...

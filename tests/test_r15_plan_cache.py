@@ -17,8 +17,7 @@ from __future__ import annotations
 
 import shutil
 
-from spark_file_mover_spark import registry
-from spark_file_mover_spark.sources import io as sio
+from spark_file_mover_spark import artifacts, registry
 
 registry.load_all()
 
@@ -28,13 +27,13 @@ KEY = "text-zipf-fit"  # pure-read, plan-cached, fast at sf0.001
 
 def test_plan_cache_hit_returns_same_plan_and_reexecutes(spark):
     df1 = registry.QUERIES[KEY](spark, SF)
-    n_before = len(sio._QUERY_PLAN_CACHE)
+    n_before = len(artifacts.names())
     df2 = registry.QUERIES[KEY](spark, SF)
     # second invocation hits the built-plan cache (no new entry; the
     # returned object is a fresh no-op projection over the cached plan
     # so explain output stays order-independent)
-    assert len(sio._QUERY_PLAN_CACHE) == n_before
-    assert any(k[1] == KEY for k in sio._QUERY_PLAN_CACHE)
+    assert len(artifacts.names()) == n_before
+    assert any(k == KEY for k in artifacts.names())
     assert df1.schema == df2.schema
     # execution still happens per action (lazy plan, not a result)
     assert df1.collect() == df2.collect()
@@ -64,12 +63,10 @@ def test_plan_cache_bypassed_under_lazy_checkpoints(spark):
     from spark_file_mover_spark.checkpoints import lazy_checkpoints
 
     registry.QUERIES[KEY](spark, SF)  # ensure a production entry exists
-    entries = {
-        k: v for k, v in sio._QUERY_PLAN_CACHE.items() if k[1] == KEY
-    }
+    entries = {KEY: artifacts.peek(KEY)} if KEY in artifacts.names() else {}
     assert entries
     with lazy_checkpoints():
         registry.QUERIES[KEY](spark, SF)
     # lazy mode must neither evict nor overwrite the production entry
     for k, v in entries.items():
-        assert sio._QUERY_PLAN_CACHE.get(k) is v
+        assert artifacts.peek(k) is v

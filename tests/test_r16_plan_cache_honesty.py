@@ -20,7 +20,7 @@ populated) build.
 
 from __future__ import annotations
 
-from spark_file_mover_spark import registry
+from spark_file_mover_spark import artifacts, registry
 from spark_file_mover_spark.sources import io as sio
 
 registry.load_all()
@@ -56,7 +56,7 @@ def test_plan_cache_hit_runs_corpus_jobs(spark):
         spark, "r16-hit-build", lambda: registry.QUERIES[DEBARRIERED](spark, SF)
     )
     assert build_jobs == 0, "plan-cached build ran Spark jobs"
-    assert any(k[1] == DEBARRIERED for k in sio._QUERY_PLAN_CACHE)
+    assert any(k == DEBARRIERED for k in artifacts.names())
     rows2, action_jobs = _jobs_in_group(
         spark, "r16-hit-action", lambda: df2.collect()
     )
@@ -82,7 +82,7 @@ def test_stripped_barrier_key_rebuilds_per_invocation(spark):
     assert jobs2 > 0, (
         "second build ran no jobs — the key is result-cached somewhere"
     )
-    assert not any(k[1] == STRIPPED for k in sio._QUERY_PLAN_CACHE)
+    assert not any(k == STRIPPED for k in artifacts.names())
     assert df1.collect() == df2.collect()
 
 

@@ -85,9 +85,9 @@ def test_kmeans_matches_pure_python_reference(spark, emb_small):
 def test_kmeans_cold_path_unchanged(spark, emb_small):
     """The materialized-view cache must be a pure memo: a cache-cleared
     (driver-fresh) invocation produces the identical assignment."""
-    from spark_file_mover_spark.llm import clustering
+    from spark_file_mover_spark import artifacts
 
-    clustering._KM_CACHE.clear()
+    artifacts.evict("clustering.kmeans.8")
     first = registry.QUERIES["embed-kmeans-lloyd"](
         spark, "/root/testdata/sf0.001"
     ).collect()

@@ -37,6 +37,11 @@ CACHED_KEYS = [
     "text-ccnet-buckets",
     "dedup-cross-bloom",
     "text-decontaminate",
+    "graph-pagerank",
+    "embed-kmeans-lloyd",
+    "embed-ann-ivfpq",
+    "sink-compact",
+    "multimodal-bmp-meta",
 ]
 
 

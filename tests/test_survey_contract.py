@@ -48,19 +48,6 @@ def test_every_registered_key_has_an_oracle():
     assert not missing, f"keys without oracle_sql: {sorted(missing)}"
 
 
-def test_priority_list_is_valid():
-    """Every _PRIORITY_R* key must exist (a typo silently demotes the
-    key to the unscored tail) and contain no duplicates."""
-    pri = next(
-        getattr(registry, n)
-        for n in sorted(dir(registry), reverse=True)
-        if n.startswith("_PRIORITY_R")
-    )
-    assert len(pri) == len(set(pri)), "duplicate keys in priority list"
-    unknown = [k for k in pri if k not in registry.QUERIES]
-    assert not unknown, f"priority keys not registered: {unknown}"
-
-
 def test_bench_line_fits_driver_capture():
     """The driver stores the last ~2000 chars of bench stdout and parses
     the final line; r7/r8 recorded `parsed: null` because the line grew
